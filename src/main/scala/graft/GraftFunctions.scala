@@ -15,10 +15,20 @@ import graft.expr._
   *   val filter = df.agg(bloom_agg($"key", 1000000, 0.01)).head.getAs[Array[Byte]](0)
   *   val hits   = probeDf.filter(bloom_contains(lit(filter), $"key"))
   * }}}
+  *
+  * @define unionContract Every `*_union_agg` merges a column of stored
+  *   sketches of one family with the family's core merge (commutative
+  *   and associative, so any partitioning gives the same result). NULL
+  *   blobs are skipped; empty input, or input of NULLs only, gives NULL.
+  *   The sketch parameters (capacity, precision, k, ...) must match — the
+  *   core merge throws otherwise.
   */
 object functions {
 
   private def lit(v: Any): Expression = Literal(v)
+
+  private[graft] def union_agg(sketches: Column, codec: SketchCodec[_ <: AnyRef]): Column =
+    toCol(SketchUnionAgg(toExpr(sketches), codec).toAggregateExpression())
 
   /** The abloom serializable-mode 64-bit key hash (XXH64 / CPython-numeric
     * + mix64) for string/binary/integral/floating columns.
@@ -69,9 +79,8 @@ object functions {
   def bloom_union(a: Column, b: Column): Column =
     toCol(BloomUnion(toExpr(a), toExpr(b)))
 
-  /** OR-merge a column of serialized filters into one. */
-  def bloom_union_agg(filters: Column): Column =
-    toCol(BloomUnionAgg(toExpr(filters)).toAggregateExpression())
+  /** OR-merge a column of serialized filters into one. $unionContract */
+  def bloom_union_agg(filters: Column): Column = union_agg(filters, BloomCodec)
 
   /** Read-only properties struct: capacity, fp_rate, block_count,
     * byte_count, bit_count, k, is_empty.
@@ -113,9 +122,9 @@ object functions {
   def cbf_agg(key: Column, capacity: Long, fpRate: Double): Column =
     cbf_agg(key, toCol(lit(1)), capacity, fpRate)
 
-  /** Cell-wise-add merge of a column of serialized counting filters. */
-  def cbf_union_agg(filters: Column): Column =
-    toCol(CbfUnionAgg(toExpr(filters)).toAggregateExpression())
+  /** Cell-wise-add merge of a column of serialized counting filters.
+    * $unionContract */
+  def cbf_union_agg(filters: Column): Column = union_agg(filters, CbfCodec)
 
   /** Membership probe (net count > 0); zero FN, SBBF-rate FP. */
   def cbf_contains(filter: Column, key: Column): Column =
@@ -150,9 +159,9 @@ object functions {
 
   def sbf_agg(key: Column): Column = sbf_agg(key, 4096, 0.001)
 
-  /** Concat/compact-merge a column of serialized scalable filters. */
-  def sbf_union_agg(filters: Column): Column =
-    toCol(SbfUnionAgg(toExpr(filters)).toAggregateExpression())
+  /** Concat/compact-merge a column of serialized scalable filters.
+    * $unionContract */
+  def sbf_union_agg(filters: Column): Column = union_agg(filters, SbfCodec)
 
   /** Membership probe across all stages; zero FN. */
   def sbf_contains(filter: Column, key: Column): Column =
@@ -182,8 +191,9 @@ object functions {
     toCol(HllAgg(AbloomKeyHash(toExpr(key)), lit(p)).toAggregateExpression())
   def hll_agg(key: Column): Column = hll_agg(key, graft.core.Hll.DefaultP)
 
-  def hll_union_agg(sketches: Column): Column =
-    toCol(HllUnionAgg(toExpr(sketches)).toAggregateExpression())
+  /** Register-wise-max merge of a column of stored HLL sketches.
+    * $unionContract */
+  def hll_union_agg(sketches: Column): Column = union_agg(sketches, HllCodec)
 
   def hll_estimate(sketch: Column): Column = toCol(HllEstimate(toExpr(sketch)))
 
@@ -199,8 +209,8 @@ object functions {
     toCol(KmvAgg(AbloomKeyHash(toExpr(key)), lit(k)).toAggregateExpression())
   def kmv_agg(key: Column): Column = kmv_agg(key, graft.core.Kmv.DefaultK)
 
-  def kmv_union_agg(sketches: Column): Column =
-    toCol(KmvUnionAgg(toExpr(sketches)).toAggregateExpression())
+  /** Bottom-k merge of a column of stored KMV sketches. $unionContract */
+  def kmv_union_agg(sketches: Column): Column = union_agg(sketches, KmvCodec)
 
   def kmv_estimate(sketch: Column): Column = toCol(KmvEstimate(toExpr(sketch)))
 
@@ -224,8 +234,9 @@ object functions {
   def kmv_sample_agg(key: Column, payload: Column): Column =
     kmv_sample_agg(key, payload, graft.core.Kmv.DefaultK)
 
-  def kmv_sample_union_agg(sketches: Column): Column =
-    toCol(KmvSampleUnionAgg(toExpr(sketches)).toAggregateExpression())
+  /** Bottom-k merge of a column of stored distinct samples.
+    * $unionContract */
+  def kmv_sample_union_agg(sketches: Column): Column = union_agg(sketches, KmvSampleCodec)
 
   def kmv_sample_estimate(sketch: Column): Column =
     toCol(KmvSampleEstimate(toExpr(sketch)))
@@ -250,8 +261,10 @@ object functions {
         org.apache.spark.sql.types.DoubleType),
       toExpr(payload), lit(k)).toAggregateExpression())
 
+  /** Top-priority merge of a column of stored weighted samples.
+    * $unionContract */
   def weighted_sample_union_agg(sketches: Column): Column =
-    toCol(WeightedSampleUnionAgg(toExpr(sketches)).toAggregateExpression())
+    union_agg(sketches, WeightedSampleCodec)
 
   /** The retained (value, weight) sample entries, ascending by hash. */
   def weighted_sample_entries(sketch: Column): Column =
@@ -265,9 +278,9 @@ object functions {
     toCol(CmsAgg(AbloomKeyHash(toExpr(key)), lit(eps), lit(delta))
       .toAggregateExpression())
 
-  /** Cell-wise-add merge of a column of stored count-min sketches. */
-  def cms_union_agg(sketches: Column): Column =
-    toCol(CmsUnionAgg(toExpr(sketches)).toAggregateExpression())
+  /** Cell-wise-add merge of a column of stored count-min sketches.
+    * $unionContract */
+  def cms_union_agg(sketches: Column): Column = union_agg(sketches, CmsCodec)
 
   def cms_query(sketch: Column, key: Column): Column =
     toCol(CmsQuery(toExpr(sketch), AbloomKeyHash(toExpr(key))))
@@ -283,9 +296,8 @@ object functions {
   def tdigest_agg(value: Column): Column =
     tdigest_agg(value, graft.core.TDigest.DefaultCompression)
 
-  /** Centroid merge of a column of stored t-digests. */
-  def tdigest_union_agg(sketches: Column): Column =
-    toCol(TDigestUnionAgg(toExpr(sketches)).toAggregateExpression())
+  /** Centroid merge of a column of stored t-digests. $unionContract */
+  def tdigest_union_agg(sketches: Column): Column = union_agg(sketches, TDigestCodec)
 
   def tdigest_quantile(sketch: Column, q: Double): Column =
     toCol(TDigestQuantile(toExpr(sketch), lit(q)))
@@ -297,9 +309,8 @@ object functions {
     toCol(KllAgg(castDouble(value), lit(k)).toAggregateExpression())
   def kll_agg(value: Column): Column = kll_agg(value, graft.core.Kll.DefaultK)
 
-  /** Compactor merge of a column of stored KLL sketches. */
-  def kll_union_agg(sketches: Column): Column =
-    toCol(KllUnionAgg(toExpr(sketches)).toAggregateExpression())
+  /** Compactor merge of a column of stored KLL sketches. $unionContract */
+  def kll_union_agg(sketches: Column): Column = union_agg(sketches, KllCodec)
 
   /** Misra–Gries heavy hitters over a STRING key: deterministic
     * frequent-items summary (counter <= true <= counter + err,
@@ -308,9 +319,8 @@ object functions {
   def mg_agg(key: Column, k: Int): Column =
     toCol(MgAgg(toExpr(key), lit(k)).toAggregateExpression())
 
-  /** Merge a column of stored heavy-hitter summaries (same k). */
-  def mg_union_agg(sketches: Column): Column =
-    toCol(MgUnionAgg(toExpr(sketches)).toAggregateExpression())
+  /** Merge a column of stored heavy-hitter summaries. $unionContract */
+  def mg_union_agg(sketches: Column): Column = union_agg(sketches, MgCodec)
 
   /** Top-m tracked keys with their count intervals. */
   def mg_topk(sketch: Column, m: Int): Column =

@@ -87,65 +87,6 @@ case class BloomFilterAgg(
   override def prettyName: String = "bloom_agg"
 }
 
-/** OR-merge an existing column of serialized filters (e.g. per-partition
-  * checkpoints) into one — the SQL-level counterpart of `a | b` over stored
-  * blobs, used for tree-merging lineage checkpoints back into a global
-  * filter without re-reading any source data.
-  */
-case class BloomUnionAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Option[Sbbf]] {
-
-  def this(child: Expression) = this(child, 0, 0)
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"bloom_union_agg expects binary filters, got ${dt.sql}")
-  }
-
-  override def createAggregationBuffer(): Option[Sbbf] = None
-
-  override def update(buffer: Option[Sbbf], input: InternalRow): Option[Sbbf] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else {
-      val f = Sbbf.fromBytes(v.asInstanceOf[Array[Byte]])
-      buffer match {
-        case Some(acc) => Some(acc.orInPlace(f))
-        case None => Some(f)
-      }
-    }
-  }
-
-  override def merge(a: Option[Sbbf], b: Option[Sbbf]): Option[Sbbf] = (a, b) match {
-    case (Some(x), Some(y)) => Some(x.orInPlace(y))
-    case (Some(x), None) => Some(x)
-    case (None, y) => y
-  }
-
-  override def eval(buffer: Option[Sbbf]): Any = buffer.map(_.toBytes).orNull
-
-  override def serialize(buffer: Option[Sbbf]): Array[Byte] =
-    buffer.map(_.toBytes).getOrElse(Array.emptyByteArray)
-  override def deserialize(bytes: Array[Byte]): Option[Sbbf] =
-    if (bytes.isEmpty) None else Some(Sbbf.fromBytes(bytes))
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomUnionAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomUnionAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): BloomUnionAgg =
-    copy(child = newChildren(0))
-
-  override def prettyName: String = "bloom_union_agg"
-}
-
 /** Runtime helpers shared by interpreted eval and generated code. */
 object BloomRuntime {
   // Per-thread single-entry cache keyed by byte-array identity: the filter

@@ -87,61 +87,6 @@ case class CbfAgg(
   override def prettyName: String = "cbf_agg"
 }
 
-/** Cell-wise-add merge of a column of serialized counting filters. */
-case class CbfUnionAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Option[Cbf]] {
-
-  def this(child: Expression) = this(child, 0, 0)
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"cbf_union_agg expects binary filters, got ${dt.sql}")
-  }
-
-  override def createAggregationBuffer(): Option[Cbf] = None
-
-  override def update(buffer: Option[Cbf], input: InternalRow): Option[Cbf] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else {
-      val f = Cbf.fromBytes(v.asInstanceOf[Array[Byte]])
-      buffer match {
-        case Some(acc) => Some(acc.addInPlace(f))
-        case None => Some(f)
-      }
-    }
-  }
-
-  override def merge(a: Option[Cbf], b: Option[Cbf]): Option[Cbf] = (a, b) match {
-    case (Some(x), Some(y)) => Some(x.addInPlace(y))
-    case (Some(x), None) => Some(x)
-    case (None, y) => y
-  }
-
-  override def eval(buffer: Option[Cbf]): Any = buffer.map(_.toBytes).orNull
-
-  override def serialize(buffer: Option[Cbf]): Array[Byte] =
-    buffer.map(_.toBytes).getOrElse(Array.emptyByteArray)
-  override def deserialize(bytes: Array[Byte]): Option[Cbf] =
-    if (bytes.isEmpty) None else Some(Cbf.fromBytes(bytes))
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): CbfUnionAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): CbfUnionAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): CbfUnionAgg =
-    copy(child = newChildren(0))
-
-  override def prettyName: String = "cbf_union_agg"
-}
-
 /** Runtime parse cache for counting filters (same identity-keyed,
   * task-scoped design as [[BloomRuntime]]).
   */

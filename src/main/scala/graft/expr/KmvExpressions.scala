@@ -63,49 +63,6 @@ case class KmvAgg(
   override def prettyName: String = "kmv_agg"
 }
 
-/** `kmv_union_agg(sketch_binary) -> binary` — merge stored KMV sketches. */
-case class KmvUnionAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Option[Kmv]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"kmv_union_agg expects binary, got ${dt.sql}")
-  }
-
-  override def createAggregationBuffer(): Option[Kmv] = None
-  override def update(buffer: Option[Kmv], input: InternalRow): Option[Kmv] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else {
-      val s = Kmv.fromBytes(v.asInstanceOf[Array[Byte]])
-      buffer match { case Some(acc) => Some(acc.mergeIn(s)); case None => Some(s) }
-    }
-  }
-  override def merge(a: Option[Kmv], b: Option[Kmv]): Option[Kmv] = (a, b) match {
-    case (Some(x), Some(y)) => Some(x.mergeIn(y))
-    case (Some(x), None) => Some(x)
-    case (None, y) => y
-  }
-  override def eval(buffer: Option[Kmv]): Any = buffer.map(_.toBytes).orNull
-  override def serialize(buffer: Option[Kmv]): Array[Byte] =
-    buffer.map(_.toBytes).getOrElse(Array.emptyByteArray)
-  override def deserialize(bytes: Array[Byte]): Option[Kmv] =
-    if (bytes.isEmpty) None else Some(Kmv.fromBytes(bytes))
-
-  override def withNewMutableAggBufferOffset(o: Int): KmvUnionAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KmvUnionAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KmvUnionAgg =
-    copy(child = c(0))
-  override def prettyName: String = "kmv_union_agg"
-}
-
 /** `kmv_estimate(sketch) -> bigint` — exact size below k, (k-1)/theta
   * rounded at/above.
   */

@@ -93,61 +93,6 @@ case class KmvSampleAgg(
   override def prettyName: String = "kmv_sample_agg"
 }
 
-/** `kmv_sample_union_agg(sketch_binary) -> binary` — merge stored
-  * distinct-sample sketches.
-  */
-case class KmvSampleUnionAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Option[KmvSample]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"kmv_sample_union_agg expects binary, got ${dt.sql}")
-  }
-
-  override def createAggregationBuffer(): Option[KmvSample] = None
-  override def update(
-      buffer: Option[KmvSample], input: InternalRow): Option[KmvSample] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else {
-      val s = KmvSample.fromBytes(v.asInstanceOf[Array[Byte]])
-      buffer match {
-        case Some(acc) => Some(acc.mergeIn(s))
-        case None => Some(s)
-      }
-    }
-  }
-  override def merge(
-      a: Option[KmvSample], b: Option[KmvSample]): Option[KmvSample] =
-    (a, b) match {
-      case (Some(x), Some(y)) => Some(x.mergeIn(y))
-      case (Some(x), None) => Some(x)
-      case (None, y) => y
-    }
-  override def eval(buffer: Option[KmvSample]): Any =
-    buffer.map(_.toBytes).orNull
-  override def serialize(buffer: Option[KmvSample]): Array[Byte] =
-    buffer.map(_.toBytes).getOrElse(Array.emptyByteArray)
-  override def deserialize(bytes: Array[Byte]): Option[KmvSample] =
-    if (bytes.isEmpty) None else Some(KmvSample.fromBytes(bytes))
-
-  override def withNewMutableAggBufferOffset(o: Int): KmvSampleUnionAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KmvSampleUnionAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): KmvSampleUnionAgg = copy(child = c(0))
-  override def prettyName: String = "kmv_sample_union_agg"
-}
-
 /** `kmv_sample_estimate(sketch) -> bigint` — exact size below k,
   * (k-1)/theta rounded at/above (identical estimator to `kmv_estimate`).
   */

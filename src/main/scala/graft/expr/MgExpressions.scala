@@ -71,50 +71,6 @@ case class MgAgg(
   override def prettyName: String = "mg_agg"
 }
 
-/** Merge a column of stored Misra–Gries summaries (same k required). */
-case class MgUnionAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Option[MisraGries]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"mg_union_agg expects binary, got ${dt.sql}")
-  }
-
-  override def createAggregationBuffer(): Option[MisraGries] = None
-  override def update(buffer: Option[MisraGries], input: InternalRow): Option[MisraGries] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else {
-      val s = MisraGries.fromBytes(v.asInstanceOf[Array[Byte]])
-      buffer match { case Some(acc) => Some(acc.merge(s)); case None => Some(s) }
-    }
-  }
-  override def merge(a: Option[MisraGries], b: Option[MisraGries]): Option[MisraGries] =
-    (a, b) match {
-      case (Some(x), Some(y)) => Some(x.merge(y))
-      case (Some(x), None) => Some(x)
-      case (None, y) => y
-    }
-  override def eval(buffer: Option[MisraGries]): Any = buffer.map(_.toBytes).orNull
-  override def serialize(buffer: Option[MisraGries]): Array[Byte] =
-    buffer.map(_.toBytes).getOrElse(Array.emptyByteArray)
-  override def deserialize(bytes: Array[Byte]): Option[MisraGries] =
-    if (bytes.isEmpty) None else Some(MisraGries.fromBytes(bytes))
-
-  override def withNewMutableAggBufferOffset(o: Int): MgUnionAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): MgUnionAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): MgUnionAgg =
-    copy(child = c(0))
-  override def prettyName: String = "mg_union_agg"
-}
-
 /** `mg_topk(sketch, m) -> array<struct<item, count_lb, count_ub>>` —
   * the top-m tracked keys by counter, with the deterministic count
   * interval `[counter, counter + err]`.

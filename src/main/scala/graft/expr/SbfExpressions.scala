@@ -81,66 +81,6 @@ case class SbfAgg(
   override def prettyName: String = "sbf_agg"
 }
 
-/** Concat merge of a column of serialized scalable filters — tree-merge
-  * stored partials (e.g. per-partition checkpoints) without re-reading
-  * source data. Same canonical-bytes guarantee as [[SbfAgg]]: the merge
-  * concatenates stage multisets and `eval` compacts once, so the output
-  * blob is identical for any merge order over the same input filters.
-  */
-case class SbfUnionAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Option[Sbf]] {
-
-  def this(child: Expression) = this(child, 0, 0)
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"sbf_union_agg expects binary filters, got ${dt.sql}")
-  }
-
-  override def createAggregationBuffer(): Option[Sbf] = None
-
-  override def update(buffer: Option[Sbf], input: InternalRow): Option[Sbf] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else {
-      val f = Sbf.fromBytes(v.asInstanceOf[Array[Byte]])
-      buffer match {
-        case Some(acc) => Some(acc.mergeInPlace(f))
-        case None => Some(f)
-      }
-    }
-  }
-
-  override def merge(a: Option[Sbf], b: Option[Sbf]): Option[Sbf] = (a, b) match {
-    case (Some(x), Some(y)) => Some(x.mergeInPlace(y))
-    case (Some(x), None) => Some(x)
-    case (None, y) => y
-  }
-
-  override def eval(buffer: Option[Sbf]): Any = buffer.map(_.compact().toBytes).orNull
-
-  override def serialize(buffer: Option[Sbf]): Array[Byte] =
-    buffer.map(_.toBytes).getOrElse(Array.emptyByteArray)
-  override def deserialize(bytes: Array[Byte]): Option[Sbf] =
-    if (bytes.isEmpty) None else Some(Sbf.fromBytes(bytes))
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): SbfUnionAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): SbfUnionAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): SbfUnionAgg =
-    copy(child = newChildren(0))
-
-  override def prettyName: String = "sbf_union_agg"
-}
-
 /** Runtime parse cache for scalable filters (task-scoped identity cache,
   * same design as [[BloomRuntime]]).
   */

@@ -70,49 +70,6 @@ case class HllAgg(
   override def prettyName: String = "hll_agg"
 }
 
-/** `hll_union_agg(sketch_binary) -> binary` — merge stored HLL sketches. */
-case class HllUnionAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Option[Hll]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"hll_union_agg expects binary, got ${dt.sql}")
-  }
-
-  override def createAggregationBuffer(): Option[Hll] = None
-  override def update(buffer: Option[Hll], input: InternalRow): Option[Hll] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else {
-      val s = Hll.fromBytes(v.asInstanceOf[Array[Byte]])
-      buffer match { case Some(acc) => Some(acc.merge(s)); case None => Some(s) }
-    }
-  }
-  override def merge(a: Option[Hll], b: Option[Hll]): Option[Hll] = (a, b) match {
-    case (Some(x), Some(y)) => Some(x.merge(y))
-    case (Some(x), None) => Some(x)
-    case (None, y) => y
-  }
-  override def eval(buffer: Option[Hll]): Any = buffer.map(_.toBytes).orNull
-  override def serialize(buffer: Option[Hll]): Array[Byte] =
-    buffer.map(_.toBytes).getOrElse(Array.emptyByteArray)
-  override def deserialize(bytes: Array[Byte]): Option[Hll] =
-    if (bytes.isEmpty) None else Some(Hll.fromBytes(bytes))
-
-  override def withNewMutableAggBufferOffset(o: Int): HllUnionAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllUnionAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): HllUnionAgg =
-    copy(child = c(0))
-  override def prettyName: String = "hll_union_agg"
-}
-
 /** `hll_estimate(sketch_binary) -> bigint`. */
 case class HllEstimate(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
@@ -238,11 +195,11 @@ case class CmsQuery(left: Expression, right: Expression) extends BinaryExpressio
         s"cms_query expects (binary, long key hash), got (${l.sql}, ${r.sql})")
     }
   override def nullSafeEval(sketch: Any, hash: Any): Any =
-    SketchRuntime.parseCms(sketch.asInstanceOf[Array[Byte]])
+    CmsCodec.parse(sketch.asInstanceOf[Array[Byte]])
       .queryHash(hash.asInstanceOf[Long])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (s, h) =>
-      s"graft.expr.SketchRuntime$$.MODULE$$.parseCms($s).queryHash($h)")
+      CmsCodec.parseCode(s) + s".queryHash($h)")
   override def prettyName: String = "cms_query"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CmsQuery =
     copy(left = l, right = r)
@@ -328,11 +285,11 @@ case class TDigestQuantile(left: Expression, right: Expression) extends BinaryEx
         s"tdigest_quantile expects (binary, double), got (${l.sql}, ${r.sql})")
     }
   override def nullSafeEval(sketch: Any, q: Any): Any =
-    SketchRuntime.parseTDigest(sketch.asInstanceOf[Array[Byte]])
+    TDigestCodec.parse(sketch.asInstanceOf[Array[Byte]])
       .quantile(q.asInstanceOf[Double])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (s, q) =>
-      s"graft.expr.SketchRuntime$$.MODULE$$.parseTDigest($s).quantile($q)")
+      TDigestCodec.parseCode(s) + s".quantile($q)")
   override def prettyName: String = "tdigest_quantile"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): TDigestQuantile =
     copy(left = l, right = r)
@@ -348,11 +305,11 @@ case class TDigestCdf(left: Expression, right: Expression) extends BinaryExpress
         s"tdigest_cdf expects (binary, double), got (${l.sql}, ${r.sql})")
     }
   override def nullSafeEval(sketch: Any, x: Any): Any =
-    SketchRuntime.parseTDigest(sketch.asInstanceOf[Array[Byte]])
+    TDigestCodec.parse(sketch.asInstanceOf[Array[Byte]])
       .cdf(x.asInstanceOf[Double])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (s, x) =>
-      s"graft.expr.SketchRuntime$$.MODULE$$.parseTDigest($s).cdf($x)")
+      TDigestCodec.parseCode(s) + s".cdf($x)")
   override def prettyName: String = "tdigest_cdf"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): TDigestCdf =
     copy(left = l, right = r)
@@ -413,11 +370,11 @@ case class KllQuantile(left: Expression, right: Expression) extends BinaryExpres
         s"kll_quantile expects (binary, double), got (${l.sql}, ${r.sql})")
     }
   override def nullSafeEval(sketch: Any, q: Any): Any =
-    SketchRuntime.parseKll(sketch.asInstanceOf[Array[Byte]])
+    KllCodec.parse(sketch.asInstanceOf[Array[Byte]])
       .quantile(q.asInstanceOf[Double])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (s, q) =>
-      s"graft.expr.SketchRuntime$$.MODULE$$.parseKll($s).quantile($q)")
+      KllCodec.parseCode(s) + s".quantile($q)")
   override def prettyName: String = "kll_quantile"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): KllQuantile =
     copy(left = l, right = r)
@@ -433,43 +390,22 @@ case class KllRank(left: Expression, right: Expression) extends BinaryExpression
         s"kll_rank expects (binary, double), got (${l.sql}, ${r.sql})")
     }
   override def nullSafeEval(sketch: Any, x: Any): Any =
-    SketchRuntime.parseKll(sketch.asInstanceOf[Array[Byte]])
+    KllCodec.parse(sketch.asInstanceOf[Array[Byte]])
       .rank(x.asInstanceOf[Double])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (s, x) =>
-      s"graft.expr.SketchRuntime$$.MODULE$$.parseKll($s).rank($x)")
+      KllCodec.parseCode(s) + s".rank($x)")
   override def prettyName: String = "kll_rank"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): KllRank =
     copy(left = l, right = r)
 }
 
-/** Per-thread identity-keyed parse caches for the scalar query
-  * expressions (the sketch blob is typically a literal, so each thread
-  * parses it once).
+/** Runtime helpers of the scalar query expressions; single-sketch parses
+  * go through the family codec's cache ([[SketchCodec.parse]]).
   */
 object SketchRuntime {
-  private val cmsCache = new ThreadLocal[(Array[Byte], CountMin)]
-  private val tdCache = new ThreadLocal[(Array[Byte], TDigest)]
-  private val kllCache = new ThreadLocal[(Array[Byte], Kll)]
-
-  def parseCms(bytes: Array[Byte]): CountMin = {
-    val c = cmsCache.get()
-    if (c != null && (c._1 eq bytes)) c._2
-    else { val s = CountMin.fromBytes(bytes); cmsCache.set((bytes, s)); s }
-  }
-  def parseTDigest(bytes: Array[Byte]): TDigest = {
-    val c = tdCache.get()
-    if (c != null && (c._1 eq bytes)) c._2
-    else { val s = TDigest.fromBytes(bytes); tdCache.set((bytes, s)); s }
-  }
-  def parseKll(bytes: Array[Byte]): Kll = {
-    val c = kllCache.get()
-    if (c != null && (c._1 eq bytes)) c._2
-    else { val s = Kll.fromBytes(bytes); kllCache.set((bytes, s)); s }
-  }
-
   // a TWO-slot cache for the inner product: routing its two operands
-  // through the single-slot parseCms would evict alternately and
+  // through the single-slot CmsCodec.parse would evict alternately and
   // re-decode BOTH sketches every row (the lit()-reparse trap)
   private val cmsPairCache =
     new ThreadLocal[(Array[Byte], CountMin, Array[Byte], CountMin)]
@@ -481,145 +417,4 @@ object SketchRuntime {
     cmsPairCache.set((a, sa, b, sb))
     sa.innerProduct(sb)
   }
-}
-
-// ------------------------------------------- stored-blob union aggregates
-// (tree-merge persisted partials without re-reading source data — the
-// same capability bloom/cbf/sbf/hll already have, completed for the
-// remaining sketches; merges are the cores' associative+commutative
-// merge, so any aggregation tree over the same blobs is equivalent)
-
-/** `cms_union_agg(sketch_binary)` — cell-wise-add merge of stored
-  * count-min sketches (compatible width/depth required by the core).
-  */
-case class CmsUnionAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Option[CountMin]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"cms_union_agg expects binary, got ${dt.sql}")
-  }
-
-  override def createAggregationBuffer(): Option[CountMin] = None
-  override def update(buffer: Option[CountMin], input: InternalRow): Option[CountMin] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else {
-      val s = CountMin.fromBytes(v.asInstanceOf[Array[Byte]])
-      buffer match { case Some(acc) => Some(acc.merge(s)); case None => Some(s) }
-    }
-  }
-  override def merge(a: Option[CountMin], b: Option[CountMin]): Option[CountMin] = (a, b) match {
-    case (Some(x), Some(y)) => Some(x.merge(y))
-    case (Some(x), None) => Some(x)
-    case (None, y) => y
-  }
-  override def eval(buffer: Option[CountMin]): Any = buffer.map(_.toBytes).orNull
-  override def serialize(buffer: Option[CountMin]): Array[Byte] =
-    buffer.map(_.toBytes).getOrElse(Array.emptyByteArray)
-  override def deserialize(bytes: Array[Byte]): Option[CountMin] =
-    if (bytes.isEmpty) None else Some(CountMin.fromBytes(bytes))
-
-  override def withNewMutableAggBufferOffset(o: Int): CmsUnionAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): CmsUnionAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): CmsUnionAgg =
-    copy(child = c(0))
-  override def prettyName: String = "cms_union_agg"
-}
-
-/** `tdigest_union_agg(sketch_binary)` — centroid merge of stored
-  * t-digests (same compression required by the core merge).
-  */
-case class TDigestUnionAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Option[TDigest]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"tdigest_union_agg expects binary, got ${dt.sql}")
-  }
-
-  override def createAggregationBuffer(): Option[TDigest] = None
-  override def update(buffer: Option[TDigest], input: InternalRow): Option[TDigest] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else {
-      val s = TDigest.fromBytes(v.asInstanceOf[Array[Byte]])
-      buffer match { case Some(acc) => Some(acc.merge(s)); case None => Some(s) }
-    }
-  }
-  override def merge(a: Option[TDigest], b: Option[TDigest]): Option[TDigest] = (a, b) match {
-    case (Some(x), Some(y)) => Some(x.merge(y))
-    case (Some(x), None) => Some(x)
-    case (None, y) => y
-  }
-  override def eval(buffer: Option[TDigest]): Any = buffer.map(_.toBytes).orNull
-  override def serialize(buffer: Option[TDigest]): Array[Byte] =
-    buffer.map(_.toBytes).getOrElse(Array.emptyByteArray)
-  override def deserialize(bytes: Array[Byte]): Option[TDigest] =
-    if (bytes.isEmpty) None else Some(TDigest.fromBytes(bytes))
-
-  override def withNewMutableAggBufferOffset(o: Int): TDigestUnionAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TDigestUnionAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): TDigestUnionAgg =
-    copy(child = c(0))
-  override def prettyName: String = "tdigest_union_agg"
-}
-
-/** `kll_union_agg(sketch_binary)` — compactor merge of stored KLL
-  * sketches (same k required by the core merge).
-  */
-case class KllUnionAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Option[Kll]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(s"kll_union_agg expects binary, got ${dt.sql}")
-  }
-
-  override def createAggregationBuffer(): Option[Kll] = None
-  override def update(buffer: Option[Kll], input: InternalRow): Option[Kll] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else {
-      val s = Kll.fromBytes(v.asInstanceOf[Array[Byte]])
-      buffer match { case Some(acc) => Some(acc.merge(s)); case None => Some(s) }
-    }
-  }
-  override def merge(a: Option[Kll], b: Option[Kll]): Option[Kll] = (a, b) match {
-    case (Some(x), Some(y)) => Some(x.merge(y))
-    case (Some(x), None) => Some(x)
-    case (None, y) => y
-  }
-  override def eval(buffer: Option[Kll]): Any = buffer.map(_.toBytes).orNull
-  override def serialize(buffer: Option[Kll]): Array[Byte] =
-    buffer.map(_.toBytes).getOrElse(Array.emptyByteArray)
-  override def deserialize(bytes: Array[Byte]): Option[Kll] =
-    if (bytes.isEmpty) None else Some(Kll.fromBytes(bytes))
-
-  override def withNewMutableAggBufferOffset(o: Int): KllUnionAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KllUnionAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KllUnionAgg =
-    copy(child = c(0))
-  override def prettyName: String = "kll_union_agg"
 }

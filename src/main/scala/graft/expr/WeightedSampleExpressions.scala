@@ -106,59 +106,6 @@ case class WeightedSampleAgg(
   override def prettyName: String = "weighted_sample_agg"
 }
 
-/** `weighted_sample_union_agg(sketch_binary) -> binary`. */
-case class WeightedSampleUnionAgg(
-    child: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Option[WeightedSample]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = true
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"weighted_sample_union_agg expects binary, got ${dt.sql}")
-  }
-
-  override def createAggregationBuffer(): Option[WeightedSample] = None
-  override def update(
-      buffer: Option[WeightedSample], input: InternalRow): Option[WeightedSample] = {
-    val v = child.eval(input)
-    if (v == null) buffer
-    else {
-      val s = WeightedSample.fromBytes(v.asInstanceOf[Array[Byte]])
-      buffer match {
-        case Some(acc) => Some(acc.mergeIn(s))
-        case None => Some(s)
-      }
-    }
-  }
-  override def merge(
-      a: Option[WeightedSample], b: Option[WeightedSample]): Option[WeightedSample] =
-    (a, b) match {
-      case (Some(x), Some(y)) => Some(x.mergeIn(y))
-      case (Some(x), None) => Some(x)
-      case (None, y) => y
-    }
-  override def eval(buffer: Option[WeightedSample]): Any =
-    buffer.map(_.toBytes).orNull
-  override def serialize(buffer: Option[WeightedSample]): Array[Byte] =
-    buffer.map(_.toBytes).getOrElse(Array.emptyByteArray)
-  override def deserialize(bytes: Array[Byte]): Option[WeightedSample] =
-    if (bytes.isEmpty) None else Some(WeightedSample.fromBytes(bytes))
-
-  override def withNewMutableAggBufferOffset(o: Int): WeightedSampleUnionAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): WeightedSampleUnionAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): WeightedSampleUnionAgg = copy(child = c(0))
-  override def prettyName: String = "weighted_sample_union_agg"
-}
-
 /** `weighted_sample_entries(sketch) ->
   * array<struct<value:string, weight:double>>` — the retained sample
   * ascending by key hash.

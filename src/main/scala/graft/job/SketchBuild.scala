@@ -5,7 +5,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Cbf, CountMin, Hll, Kll, MisraGries, Sbbf, Sbf, TDigest}
+import graft.core.{Cbf, Hll, Kll, MisraGries, Sbbf, Sbf, TDigest}
+import graft.expr.{BloomCodec, CbfCodec, CmsCodec, HllCodec, KllCodec, KmvCodec, KmvSampleCodec,
+  MgCodec, SbfCodec, SketchCodec, TDigestCodec, WeightedSampleCodec}
 import graft.functions._
 
 /** A per-partition sketch kernel for [[SketchBuild]]: how to project the
@@ -26,17 +28,19 @@ trait PartitionSketcher extends Serializable {
   /** Fold the projected (non-null) value at ordinal 0 into the buffer. */
   def update(buffer: AnyRef, row: InternalRow): Unit
   def toBytes(buffer: AnyRef): Array[Byte]
+  /** The family's wire codec: parses, merges and canonicalizes the
+    * serialized partials [[toBytes]] writes. */
+  def codec: SketchCodec[_ <: AnyRef]
   /** Declarative union aggregate over serialized partials. */
-  def unionAgg(sketches: Column): Column
+  final def unionAgg(sketches: Column): Column = union_agg(sketches, codec)
   /** Pairwise serialized merge — the task-side kernel of
-    * [[SketchBuild.merge]]'s tree mode. Must be safe to apply in any
-    * tree shape (no per-node canonicalization that isn't confluent —
-    * see [[finalizeBytes]]). */
-  def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte]
+    * [[SketchBuild.merge]]'s tree mode. Safe in any tree shape: no
+    * family canonicalizes mid-tree (see [[finalizeBytes]]). */
+  final def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] = codec.mergeBytes(a, b)
   /** Canonicalization applied ONCE to a tree merge's root (identity for
     * most families; the scalable filter compacts here because stage
     * compaction mid-tree is not confluent). */
-  def finalizeBytes(bytes: Array[Byte]): Array[Byte] = bytes
+  final def finalizeBytes(bytes: Array[Byte]): Array[Byte] = codec.finishBytes(bytes)
 }
 
 object PartitionSketcher {
@@ -52,9 +56,7 @@ object PartitionSketcher {
     def update(b: AnyRef, row: InternalRow): Unit =
       b.asInstanceOf[Sbbf].insertHash(row.getLong(0))
     def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[Sbbf].toBytes
-    def unionAgg(c: Column): Column = bloom_union_agg(c)
-    def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-      Sbbf.fromBytes(a).orInPlace(Sbbf.fromBytes(b)).toBytes
+    def codec = BloomCodec
   }
 
   def hll(p: Int = Hll.DefaultP): PartitionSketcher = new HashedKernel {
@@ -62,9 +64,7 @@ object PartitionSketcher {
     def update(b: AnyRef, row: InternalRow): Unit =
       b.asInstanceOf[graft.core.HllBuffer].addHash(row.getLong(0))
     def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[graft.core.HllBuffer].toBytes
-    def unionAgg(c: Column): Column = graft.functions.hll_union_agg(c)
-    def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-      Hll.fromBytes(a).merge(Hll.fromBytes(b)).toBytes
+    def codec = HllCodec
   }
 
   def cms(eps: Double, delta: Double): PartitionSketcher = new HashedKernel {
@@ -72,9 +72,7 @@ object PartitionSketcher {
     def update(b: AnyRef, row: InternalRow): Unit =
       b.asInstanceOf[graft.core.CountMinBuffer].addHash(row.getLong(0))
     def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[graft.core.CountMinBuffer].toBytes
-    def unionAgg(c: Column): Column = cms_union_agg(c)
-    def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-      CountMin.fromBytes(a).merge(CountMin.fromBytes(b)).toBytes
+    def codec = CmsCodec
   }
 
   def tdigest(compression: Double = TDigest.DefaultCompression): PartitionSketcher =
@@ -84,9 +82,7 @@ object PartitionSketcher {
       def update(b: AnyRef, row: InternalRow): Unit =
         b.asInstanceOf[TDigest].add(row.getDouble(0))
       def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[TDigest].toBytes
-      def unionAgg(c: Column): Column = tdigest_union_agg(c)
-      def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-        TDigest.fromBytes(a).merge(TDigest.fromBytes(b)).toBytes
+      def codec = TDigestCodec
     }
 
   def kll(k: Int = Kll.DefaultK): PartitionSketcher = new PartitionSketcher {
@@ -95,9 +91,7 @@ object PartitionSketcher {
     def update(b: AnyRef, row: InternalRow): Unit =
       b.asInstanceOf[Kll].add(row.getDouble(0))
     def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[Kll].toBytes
-    def unionAgg(c: Column): Column = kll_union_agg(c)
-    def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-      Kll.fromBytes(a).merge(Kll.fromBytes(b)).toBytes
+    def codec = KllCodec
   }
 
   /** Insert-only counting-filter build (deletes happen at query time via
@@ -107,9 +101,7 @@ object PartitionSketcher {
     def update(b: AnyRef, row: InternalRow): Unit =
       b.asInstanceOf[Cbf].insertHash(row.getLong(0))
     def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[Cbf].toBytes
-    def unionAgg(c: Column): Column = cbf_union_agg(c)
-    def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-      Cbf.fromBytes(a).addInPlace(Cbf.fromBytes(b)).toBytes
+    def codec = CbfCodec
   }
 
   /** Scalable-filter build: partials grow stages independently; the
@@ -120,11 +112,7 @@ object PartitionSketcher {
     def update(b: AnyRef, row: InternalRow): Unit =
       b.asInstanceOf[Sbf].addHash(row.getLong(0))
     def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[Sbf].toBytes
-    def unionAgg(c: Column): Column = sbf_union_agg(c)
-    def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-      Sbf.fromBytes(a).mergeInPlace(Sbf.fromBytes(b)).toBytes
-    override def finalizeBytes(bytes: Array[Byte]): Array[Byte] =
-      Sbf.fromBytes(bytes).compact().toBytes
+    def codec = SbfCodec
   }
 
   /** Distinct-sample-with-payload build: like [[kmv]] but each retained
@@ -154,10 +142,7 @@ object PartitionSketcher {
     }
     def toBytes(b: AnyRef): Array[Byte] =
       b.asInstanceOf[graft.core.KmvSample].toBytes
-    def unionAgg(c: Column): Column = graft.functions.kmv_sample_union_agg(c)
-    def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-      graft.core.KmvSample.fromBytes(a)
-        .mergeIn(graft.core.KmvSample.fromBytes(b)).toBytes
+    def codec = KmvSampleCodec
     }
   }
 
@@ -206,11 +191,7 @@ object PartitionSketcher {
     }
     def toBytes(b: AnyRef): Array[Byte] =
       b.asInstanceOf[graft.core.WeightedSample].toBytes
-    def unionAgg(c: Column): Column =
-      graft.functions.weighted_sample_union_agg(c)
-    def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-      graft.core.WeightedSample.fromBytes(a)
-        .mergeIn(graft.core.WeightedSample.fromBytes(b)).toBytes
+    def codec = WeightedSampleCodec
   }
 
   /** Bottom-k/theta build: the state is a canonical set, so tree and
@@ -220,9 +201,7 @@ object PartitionSketcher {
     def update(b: AnyRef, row: InternalRow): Unit =
       b.asInstanceOf[graft.core.Kmv].add(row.getLong(0))
     def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[graft.core.Kmv].toBytes
-    def unionAgg(c: Column): Column = graft.functions.kmv_union_agg(c)
-    def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-      graft.core.Kmv.fromBytes(a).mergeIn(graft.core.Kmv.fromBytes(b)).toBytes
+    def codec = KmvCodec
   }
 
   def misraGries(k: Int): PartitionSketcher = new PartitionSketcher {
@@ -231,9 +210,7 @@ object PartitionSketcher {
     def update(b: AnyRef, row: InternalRow): Unit =
       b.asInstanceOf[MisraGries].add(row.getUTF8String(0)) // no String alloc
     def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[MisraGries].toBytes
-    def unionAgg(c: Column): Column = mg_union_agg(c)
-    def mergeBytes(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-      MisraGries.fromBytes(a).merge(MisraGries.fromBytes(b)).toBytes
+    def codec = MgCodec
   }
 }
 

@@ -132,43 +132,16 @@ case class SketchPartialAggExec(
 
       if (longKeyPath) new Iterator[InternalRow] {
         // -------- primitive fast path: single LONG group key ----------
-        // Open-addressing mix64/linear-probe map over parallel arrays —
-        // no UnsafeRow key copies, no entry objects, no per-row boxing.
         // Flush semantics (group rail, empty-buffer byte estimate,
         // sampled live-byte guard) are IDENTICAL to the generic path;
         // a nullable key gets one out-of-table slot.
-        private var cap = 1 << 10
-        private var mask = cap - 1
-        private var keys = new Array[Long](cap)
-        private var occ = new Array[Boolean](cap)
-        private var vals = new Array[Array[Any]](cap)
-        private var n = 0
+        private val table = new LongKeyBufferMap(() => newBufs())
         private var nullBufs: Array[Any] = _
         private val outRow = new GenericInternalRow(1 + funcs.length)
         // drain state: -2 = not draining; -1 = null slot pending; >= 0 =
         // next table index to scan
         private var drainIdx = -2
 
-        private def probe(k: Long): Int = {
-          var i = graft.core.Hashing.mix64(k).toInt & mask
-          while (occ(i) && keys(i) != k) i = (i + 1) & mask
-          i
-        }
-        private def grow(): Unit = {
-          val ok = keys; val oo = occ; val ov = vals; val ocap = cap
-          cap <<= 1; mask = cap - 1
-          keys = new Array[Long](cap)
-          occ = new Array[Boolean](cap)
-          vals = new Array[Array[Any]](cap)
-          var i = 0
-          while (i < ocap) {
-            if (oo(i)) {
-              val j = probe(ok(i))
-              occ(j) = true; keys(j) = ok(i); vals(j) = ov(i)
-            }
-            i += 1
-          }
-        }
         private def newBufs(): Array[Any] = {
           val bufs = new Array[Any](funcs.length)
           var i = 0
@@ -177,7 +150,7 @@ case class SketchPartialAggExec(
           }
           bufs
         }
-        private def mapSize: Int = n + (if (nullBufs != null) 1 else 0)
+        private def mapSize: Int = table.size + (if (nullBufs != null) 1 else 0)
 
         private val SampleEvery = 8192
         private var rowsSinceSample = 0
@@ -192,27 +165,22 @@ case class SketchPartialAggExec(
         private def liveBytesExceeded(hot: Array[Any]): Boolean = {
           rowsSinceSample = 0
           var perGroup = groupBytes(hot)
-          // second probe: the first occupied slot within a BOUNDED scan —
-          // the generic path's "oldest entry" stand-in for long-lived
-          // groups that are no longer hot. The bound matters when a
-          // previously-grown table meets a low-cardinality chunk (cap
-          // millions, occupancy tens): an unbounded scan would walk the
-          // empty prefix on every 8192-row sample. If no slot lands in
-          // the window the hot-entry estimate alone governs — same
-          // heuristic strength as the generic path's single extra probe.
-          var i = 0
-          val scanLimit = math.min(cap, 256)
-          while (i < scanLimit && !occ(i)) i += 1
-          if (i < scanLimit && !(vals(i) eq hot)) {
-            val hb = groupBytes(vals(i))
+          // second probe: the lowest occupied slot — the generic path's
+          // "oldest entry" stand-in for long-lived groups that are no
+          // longer hot. Tracked on insert, so it finds a live entry even
+          // when a previously-grown table meets a low-cardinality chunk
+          // (cap millions, occupancy tens) without walking the empty
+          // prefix on every sample.
+          val lo = table.lowest
+          if (lo < table.capacity && !(table.buffers(lo) eq hot)) {
+            val hb = groupBytes(table.buffers(lo))
             if (hb > perGroup) perGroup = hb
           }
           perGroup * mapSize > maxBytes
         }
 
         private def aggregateChunk(): Unit = {
-          java.util.Arrays.fill(occ, false)
-          n = 0
+          table.reset()
           nullBufs = null
           var flush = false
           while (iter.hasNext && !flush) {
@@ -222,16 +190,7 @@ case class SketchPartialAggExec(
             if (keyRow.isNullAt(0)) {
               if (nullBufs == null) nullBufs = newBufs()
               bufs = nullBufs
-            } else {
-              val k = keyRow.getLong(0)
-              if ((n + 1) * 2 > cap) grow()
-              val i = probe(k)
-              if (occ(i)) bufs = vals(i)
-              else {
-                bufs = newBufs()
-                occ(i) = true; keys(i) = k; vals(i) = bufs; n += 1
-              }
-            }
+            } else bufs = table.getOrInsert(keyRow.getLong(0))
             var i = 0
             while (i < funcs.length) {
               bufs(i) = funcs(i).update(bufs(i), row); i += 1
@@ -243,19 +202,14 @@ case class SketchPartialAggExec(
               flush = true
             }
           }
-          drainIdx = if (nullBufs != null) -1 else nextOcc(0)
-        }
-        private def nextOcc(from: Int): Int = {
-          var i = from
-          while (i < cap && !occ(i)) i += 1
-          i // == cap when exhausted
+          drainIdx = if (nullBufs != null) -1 else table.lowest
         }
 
         override def hasNext: Boolean = {
-          if (drainIdx == -1 || (drainIdx >= 0 && drainIdx < cap)) true
+          if (drainIdx == -1 || (drainIdx >= 0 && drainIdx < table.capacity)) true
           else if (iter.hasNext) {
             aggregateChunk()
-            drainIdx == -1 || drainIdx < cap
+            drainIdx == -1 || drainIdx < table.capacity
           } else false
         }
 
@@ -266,11 +220,11 @@ case class SketchPartialAggExec(
             outRow.update(0, null)
             bufs = nullBufs
             nullBufs = null
-            drainIdx = nextOcc(0)
+            drainIdx = table.lowest
           } else {
-            outRow.update(0, keys(drainIdx))
-            bufs = vals(drainIdx)
-            drainIdx = nextOcc(drainIdx + 1)
+            outRow.update(0, table.key(drainIdx))
+            bufs = table.buffers(drainIdx)
+            drainIdx = table.nextOccupied(drainIdx + 1)
           }
           var i = 0
           while (i < funcs.length) {
@@ -389,6 +343,73 @@ case class SketchPartialAggExec(
   override protected def withNewChildInternal(newChild: SparkPlan): SketchPartialAggExec =
     copy(child = newChild)
   override def simpleStringWithNodeId(): String = "GraftSketchAgg(partial)"
+}
+
+/** The long-key fast path's group map: open addressing with mix64 and
+  * linear probing over parallel arrays — no key copies, no entry
+  * objects, no per-row boxing. Capacity only grows; [[reset]] empties
+  * the map between flush chunks and drops every buffer reference, so a
+  * flushed chunk's buffers are not kept alive while the next one fills.
+  */
+private[plans] final class LongKeyBufferMap(newBufs: () => Array[Any]) {
+  private var cap = 1 << 10
+  private var mask = cap - 1
+  private var keys = new Array[Long](cap)
+  private var occ = new Array[Boolean](cap)
+  private var vals = new Array[Array[Any]](cap)
+  private var n = 0
+  private var lo = cap
+
+  def size: Int = n
+  def capacity: Int = cap
+  /** Lowest occupied slot; `capacity` when the map is empty. */
+  def lowest: Int = lo
+  def occupied(i: Int): Boolean = occ(i)
+  def key(i: Int): Long = keys(i)
+  def buffers(i: Int): Array[Any] = vals(i)
+
+  private def probe(k: Long): Int = {
+    var i = graft.core.Hashing.mix64(k).toInt & mask
+    while (occ(i) && keys(i) != k) i = (i + 1) & mask
+    i
+  }
+  private def insertAt(i: Int, k: Long, bufs: Array[Any]): Unit = {
+    occ(i) = true; keys(i) = k; vals(i) = bufs; n += 1
+    if (i < lo) lo = i
+  }
+  private def grow(): Unit = {
+    val ok = keys; val oo = occ; val ov = vals; val ocap = cap
+    cap <<= 1; mask = cap - 1
+    keys = new Array[Long](cap)
+    occ = new Array[Boolean](cap)
+    vals = new Array[Array[Any]](cap)
+    n = 0; lo = cap
+    var i = 0
+    while (i < ocap) {
+      if (oo(i)) insertAt(probe(ok(i)), ok(i), ov(i))
+      i += 1
+    }
+  }
+
+  /** The key's buffers, created on first sight. */
+  def getOrInsert(k: Long): Array[Any] = {
+    if ((n + 1) * 2 > cap) grow()
+    val i = probe(k)
+    if (occ(i)) vals(i)
+    else { val bufs = newBufs(); insertAt(i, k, bufs); bufs }
+  }
+
+  def nextOccupied(from: Int): Int = {
+    var i = from
+    while (i < cap && !occ(i)) i += 1
+    i // == cap when exhausted
+  }
+
+  def reset(): Unit = {
+    java.util.Arrays.fill(occ, false)
+    java.util.Arrays.fill(vals.asInstanceOf[Array[AnyRef]], null)
+    n = 0; lo = cap
+  }
 }
 
 case class SketchFinalAggExec(

@@ -20,9 +20,12 @@ object Registry {
 
   /** (name, builder) for every SQL-exposed function. Aggregates are
     * returned unwrapped — the analyzer wraps AggregateFunction in
-    * AggregateExpression during resolution.
+    * AggregateExpression during resolution. The `*_union_agg` entries
+    * come from [[SketchCodec.all]], one per family codec.
     */
-  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+  type Builder = Seq[Expression] => Expression
+
+  val functions: Seq[(String, Builder)] = Seq[(String, Builder)](
     "abloom_key_hash" -> { args => AbloomKeyHash(args.head) },
     "bloom_agg" -> { args =>
       require(args.size == 2 || args.size == 3, "bloom_agg(key, capacity[, fp_rate])")
@@ -38,7 +41,6 @@ object Registry {
       require(args.size == 2, "bloom_union(a, b)")
       BloomUnion(args(0), args(1))
     },
-    "bloom_union_agg" -> { args => BloomUnionAgg(args.head) },
     "bloom_describe" -> { args => BloomDescribe(args.head) },
     "bloom_is_empty" -> { args => BloomIsEmpty(args.head) },
     "bloom_cardinality_estimate" -> { args => BloomCardinalityEstimate(args.head) },
@@ -64,7 +66,6 @@ object Registry {
       CbfAgg(AbloomKeyHash(args(0)),
         Cast(args(1), org.apache.spark.sql.types.IntegerType), args(2), fp)
     },
-    "cbf_union_agg" -> { args => CbfUnionAgg(args.head) },
     "cbf_contains" -> { args =>
       require(args.size == 2, "cbf_contains(filter, key)")
       CbfContains(args(0), AbloomKeyHash(args(1)))
@@ -81,7 +82,6 @@ object Registry {
         else org.apache.spark.sql.catalyst.expressions.Literal(0.001)
       SbfAgg(AbloomKeyHash(args(0)), cap, fp)
     },
-    "sbf_union_agg" -> { args => SbfUnionAgg(args.head) },
     "sbf_contains" -> { args =>
       require(args.size == 2, "sbf_contains(filter, key)")
       SbfContains(args(0), AbloomKeyHash(args(1)))
@@ -92,13 +92,11 @@ object Registry {
         else org.apache.spark.sql.catalyst.expressions.Literal(graft.core.Hll.DefaultP)
       HllAgg(AbloomKeyHash(args(0)), p)
     },
-    "hll_union_agg" -> { args => HllUnionAgg(args.head) },
     "kmv_agg" -> { args =>
       val k = if (args.size > 1) args(1)
         else org.apache.spark.sql.catalyst.expressions.Literal(graft.core.Kmv.DefaultK)
       KmvAgg(AbloomKeyHash(args(0)), k)
     },
-    "kmv_union_agg" -> { args => KmvUnionAgg(args.head) },
     "kmv_estimate" -> { args => KmvEstimate(args.head) },
     "kmv_sample_agg" -> { args =>
       require(args.size >= 2, "kmv_sample_agg(key, payload[, k])")
@@ -106,7 +104,6 @@ object Registry {
         else org.apache.spark.sql.catalyst.expressions.Literal(graft.core.Kmv.DefaultK)
       KmvSampleAgg(AbloomKeyHash(args(0)), args(1), k)
     },
-    "kmv_sample_union_agg" -> { args => KmvSampleUnionAgg(args.head) },
     "kmv_sample_estimate" -> { args => KmvSampleEstimate(args.head) },
     "kmv_sample_values" -> { args => KmvSampleValues(args.head) },
     "kmv_sample_describe" -> { args => KmvSampleDescribe(args.head) },
@@ -117,7 +114,6 @@ object Registry {
       WeightedSampleAgg(AbloomKeyHash(args(0)),
         Cast(args(1), org.apache.spark.sql.types.DoubleType), args(2), k)
     },
-    "weighted_sample_union_agg" -> { args => WeightedSampleUnionAgg(args.head) },
     "weighted_sample_entries" -> { args => WeightedSampleEntries(args.head) },
     "weighted_sample_describe" -> { args => WeightedSampleDescribe(args.head) },
     "kmv_intersect_estimate" -> { args =>
@@ -134,7 +130,6 @@ object Registry {
       require(args.size == 3, "cms_agg(key, eps, delta)")
       CmsAgg(AbloomKeyHash(args(0)), args(1), args(2))
     },
-    "cms_union_agg" -> { args => CmsUnionAgg(args.head) },
     "cms_query" -> { args =>
       require(args.size == 2, "cms_query(sketch, key)")
       CmsQuery(args(0), AbloomKeyHash(args(1)))
@@ -148,7 +143,6 @@ object Registry {
         else org.apache.spark.sql.catalyst.expressions.Literal(graft.core.TDigest.DefaultCompression)
       TDigestAgg(Cast(args(0), DoubleType), c)
     },
-    "tdigest_union_agg" -> { args => TDigestUnionAgg(args.head) },
     "tdigest_quantile" -> { args => TDigestQuantile(args(0), Cast(args(1), DoubleType)) },
     "tdigest_cdf" -> { args => TDigestCdf(args(0), Cast(args(1), DoubleType)) },
     "kll_agg" -> { args =>
@@ -156,12 +150,10 @@ object Registry {
         else org.apache.spark.sql.catalyst.expressions.Literal(graft.core.Kll.DefaultK)
       KllAgg(Cast(args(0), DoubleType), k)
     },
-    "kll_union_agg" -> { args => KllUnionAgg(args.head) },
     "mg_agg" -> { args =>
       require(args.size == 2, "mg_agg(key, k)")
       MgAgg(args(0), args(1))
     },
-    "mg_union_agg" -> { args => MgUnionAgg(args.head) },
     "mg_topk" -> { args =>
       require(args.size == 2, "mg_topk(sketch, m)")
       MgTopK(args(0), Cast(args(1), org.apache.spark.sql.types.IntegerType))
@@ -266,7 +258,9 @@ object Registry {
       TopKAgg(Cast(args(0), DoubleType), Cast(args(1), LongType),
         args(2), foldableInt(args(3), "k"))
         .toAggregateExpression()
-    })
+    }) ++ SketchCodec.all.map { codec =>
+      s"${codec.family}_union_agg" -> { (args: Seq[Expression]) => SketchUnionAgg(args.head, codec) }
+    }
 
   private def foldableInt(e: Expression, name: String): Int = {
     require(e.foldable, s"$name must be a constant")

@@ -241,8 +241,7 @@ class SketchBuildSpec extends SparkTestBase {
         inner.update(b, row)
       }
       def toBytes(b: AnyRef) = inner.toBytes(b)
-      def unionAgg(c: org.apache.spark.sql.Column) = inner.unionAgg(c)
-      def mergeBytes(a: Array[Byte], b: Array[Byte]) = inner.mergeBytes(a, b)
+      def codec = inner.codec
     }
     val clean = SketchBuild.resume(longs, col("id"), PartitionSketcher.hll(), tmp())
     val dir = tmp()

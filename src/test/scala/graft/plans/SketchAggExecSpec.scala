@@ -317,6 +317,56 @@ class SketchAggExecSpec extends SparkTestBase {
     } finally spark.conf.unset("spark.graft.sketchAgg.flushBytes")
   }
 
+  test("long-key map: reset drops flushed buffers; lowest slot tracks inserts and growth") {
+    val m = new LongKeyBufferMap(() => Array[Any](new Object))
+    def firstOccupied = (0 until m.capacity).find(m.occupied).getOrElse(m.capacity)
+    (0L until 3000L).foreach(m.getOrInsert) // grows 1024 -> 8192 slots
+    assert(m.size === 3000 && m.capacity === 8192)
+    assert(m.lowest === firstOccupied)
+    m.reset()
+    assert(m.size === 0 && m.lowest === m.capacity)
+    // a low-cardinality chunk whose slots all lie past the first 256
+    val late = Iterator.from(100000).map(_.toLong)
+      .filter(k => (graft.core.Hashing.mix64(k).toInt & (m.capacity - 1)) >= 256)
+      .take(3).toSeq
+    late.foreach(m.getOrInsert)
+    assert(m.lowest === firstOccupied && m.lowest >= 256)
+    assert((0 until m.capacity).forall(i => m.occupied(i) || m.buffers(i) == null),
+      "a slot that is not occupied still references a flushed buffer")
+  }
+
+  test("grown long-key table + low-cardinality chunk past slot 256: byte-budget flush fires") {
+    // chunk 1: 2000 single-row groups hit the group rail (flushThreshold)
+    // and leave the table grown to 4096 slots. chunk 2: group A collects
+    // 3000 distinct 120-char values (its MG grows to ~400 KB), then group
+    // B repeats one value; the 8192-row byte sample lands on B (small),
+    // so only the live-byte probe of the lowest occupied slot (A) can see
+    // that the two groups exceed the 400 KB budget. Both keys' slots lie
+    // past 256, where a bounded prefix scan finds nothing.
+    val cap = 4096
+    def slot(k: Long) = graft.core.Hashing.mix64(k).toInt & (cap - 1)
+    val Seq(a, b) = Iterator.from(1000000).map(_.toLong).filter(slot(_) >= 256)
+      .take(2).toSeq.sortBy(slot)
+    val pad = "x" * 120
+    val rows = (0L until 2000L).map(k => (k, "v")) ++
+      (0 until 3000).map(i => (a, s"$pad$i")) ++
+      (0 until 4000).map(_ => (b, "v"))
+    val df = spark.sparkContext.parallelize(rows, 1).toDF("g", "v")
+      .groupBy(col("g")).agg(mg_agg(col("v"), 4096).as("m"))
+    spark.conf.set("spark.graft.sketchAgg.flushThreshold", "2000")
+    spark.conf.set("spark.graft.sketchAgg.flushBytes", (400L << 10).toString)
+    try {
+      // ONE execution: a second collect would add to the same metric
+      val partial = collectPhysical(df).collectFirst { case p: SketchPartialAggExec => p }
+      assert(partial.isDefined)
+      assert(partial.get.metrics("numFlushes").value === 2,
+        "the grown-table chunk exceeded the byte budget but no flush fired")
+    } finally {
+      spark.conf.unset("spark.graft.sketchAgg.flushThreshold")
+      spark.conf.unset("spark.graft.sketchAgg.flushBytes")
+    }
+  }
+
   test("sql_surface harness query's sketch CTE is planned by SketchAggStrategy") {
     // the harness query splits its exact count(DISTINCT) into a separate
     // scan precisely so the all-sketch aggregate plans through the custom
