@@ -30,6 +30,16 @@ object functions {
   private[graft] def union_agg(sketches: Column, codec: SketchCodec[_ <: AnyRef]): Column =
     toCol(SketchUnionAgg(toExpr(sketches), codec).toAggregateExpression())
 
+  private def query(op: SketchOp, sketch: Column, arg: Expression): Column =
+    toCol(SketchQuery(toExpr(sketch), arg, op))
+
+  private def keyQuery(op: SketchOp, sketch: Column, key: Column): Column =
+    query(op, sketch, AbloomKeyHash(toExpr(key)))
+
+  private def broadcastQuery(op: SketchOp,
+      filter: org.apache.spark.broadcast.Broadcast[Array[Byte]], key: Column): Column =
+    toCol(SketchBroadcastQuery(filter, AbloomKeyHash(toExpr(key)), op))
+
   /** The abloom serializable-mode 64-bit key hash (XXH64 / CPython-numeric
     * + mix64) for string/binary/integral/floating columns.
     */
@@ -61,11 +71,11 @@ object functions {
 
   /** Membership probe; may false-positive, never false-negative. */
   def bloom_contains(filter: Column, key: Column): Column =
-    toCol(BloomMightContain(toExpr(filter), AbloomKeyHash(toExpr(key))))
+    keyQuery(SketchOp.BloomContains, filter, key)
 
   /** Probe with a pre-computed 64-bit key hash. */
   def bloom_contains_hash(filter: Column, keyHash: Column): Column =
-    toCol(BloomMightContain(toExpr(filter), toExpr(keyHash)))
+    query(SketchOp.BloomContains, filter, toExpr(keyHash))
 
   /** Probe against a broadcast filter — preferred for large filters: the
     * bytes ship once per executor (torrent broadcast), not inside every
@@ -73,7 +83,7 @@ object functions {
     */
   def bloom_contains(filter: org.apache.spark.broadcast.Broadcast[Array[Byte]],
       key: Column): Column =
-    toCol(BloomBroadcastContain(filter, AbloomKeyHash(toExpr(key))))
+    broadcastQuery(SketchOp.BloomContains, filter, key)
 
   /** New filter = word-wise OR of two serialized filters (params must match). */
   def bloom_union(a: Column, b: Column): Column =
@@ -128,23 +138,23 @@ object functions {
 
   /** Membership probe (net count > 0); zero FN, SBBF-rate FP. */
   def cbf_contains(filter: Column, key: Column): Column =
-    toCol(CbfContains(toExpr(filter), AbloomKeyHash(toExpr(key))))
+    keyQuery(SketchOp.CbfContains, filter, key)
 
   /** Broadcast-backed probe — preferred for counting filters, which are
     * 32x the SBBF's size and cross the ~1 MB literal line early.
     */
   def cbf_contains(filter: org.apache.spark.broadcast.Broadcast[Array[Byte]],
       key: Column): Column =
-    toCol(CbfBroadcastContains(filter, AbloomKeyHash(toExpr(key))))
+    broadcastQuery(SketchOp.CbfContains, filter, key)
 
   /** Count-min style upper bound on the key's net count. */
   def cbf_count(filter: Column, key: Column): Column =
-    toCol(CbfCount(toExpr(filter), AbloomKeyHash(toExpr(key))))
+    keyQuery(SketchOp.CbfCount, filter, key)
 
   /** Broadcast-backed net-count upper bound. */
   def cbf_count(filter: org.apache.spark.broadcast.Broadcast[Array[Byte]],
       key: Column): Column =
-    toCol(CbfBroadcastCount(filter, AbloomKeyHash(toExpr(key))))
+    broadcastQuery(SketchOp.CbfCount, filter, key)
 
   // --------------------------------------------------- scalable bloom (SBF)
 
@@ -165,14 +175,14 @@ object functions {
 
   /** Membership probe across all stages; zero FN. */
   def sbf_contains(filter: Column, key: Column): Column =
-    toCol(SbfContains(toExpr(filter), AbloomKeyHash(toExpr(key))))
+    keyQuery(SketchOp.SbfContains, filter, key)
 
   /** Broadcast-backed probe — preferred once the stage series has grown
     * past ~1 MB (large streams).
     */
   def sbf_contains(filter: org.apache.spark.broadcast.Broadcast[Array[Byte]],
       key: Column): Column =
-    toCol(SbfBroadcastContains(filter, AbloomKeyHash(toExpr(key))))
+    broadcastQuery(SketchOp.SbfContains, filter, key)
 
   /** Read-only properties: initial_capacity, fp0, growth, tightening,
     * stage_count, inserted_count, compound_fp_bound.
@@ -283,7 +293,7 @@ object functions {
   def cms_union_agg(sketches: Column): Column = union_agg(sketches, CmsCodec)
 
   def cms_query(sketch: Column, key: Column): Column =
-    toCol(CmsQuery(toExpr(sketch), AbloomKeyHash(toExpr(key))))
+    keyQuery(SketchOp.CmsQuery, sketch, key)
 
   /** Equi-join cardinality estimate from two same-dimension CMS: never
     * under, over by <= eps*totalA*totalB w.p. 1-delta. */
@@ -300,9 +310,9 @@ object functions {
   def tdigest_union_agg(sketches: Column): Column = union_agg(sketches, TDigestCodec)
 
   def tdigest_quantile(sketch: Column, q: Double): Column =
-    toCol(TDigestQuantile(toExpr(sketch), lit(q)))
+    query(SketchOp.TDigestQuantile, sketch, lit(q))
   def tdigest_cdf(sketch: Column, x: Column): Column =
-    toCol(TDigestCdf(toExpr(sketch), castDouble(x)))
+    query(SketchOp.TDigestCdf, sketch, castDouble(x))
 
   /** KLL quantile sketch (additive rank error ~2.5/k). */
   def kll_agg(value: Column, k: Int): Column =
@@ -327,9 +337,9 @@ object functions {
     toCol(MgTopK(toExpr(sketch), lit(m)))
 
   def kll_quantile(sketch: Column, q: Double): Column =
-    toCol(KllQuantile(toExpr(sketch), lit(q)))
+    query(SketchOp.KllQuantile, sketch, lit(q))
   def kll_rank(sketch: Column, x: Column): Column =
-    toCol(KllRank(toExpr(sketch), castDouble(x)))
+    query(SketchOp.KllRank, sketch, castDouble(x))
 
   // ------------------------------------------------------ dedup kernels
 

@@ -34,19 +34,14 @@ object SparkEntry {
     df.select(abloom_key_hash(col(key)).as("__kh"))
       .agg(bloom_agg_hashed(col("__kh"), cap, fp)).head().getAs[Array[Byte]](0)
 
-  /** Above this size, a literal filter costs a measured 14-30x per-task
-    * deserialize+parse tax (CLAUDE.md round-1 lesson) — broadcast instead.
-    */
-  private[graft] val FilterLitMaxBytes: Int = 1 << 20
-
   /** Size-gated membership probe: ship the serialized filter as a plan
-    * literal below [[FilterLitMaxBytes]] (cheap, no broadcast round),
+    * literal up to [[graft.expr.SketchQuery.LitMaxBytes]] (cheap, no broadcast round),
     * as a torrent broadcast above it (bytes ship once per executor, not
     * inside every task binary). Filters here are sized from data counts,
     * so at sf >= 10 the probes cross the line automatically.
     */
   private[graft] def probeFilter(s: SparkSession, bytes: Array[Byte], key: Column): Column =
-    if (bytes.length <= FilterLitMaxBytes) bloom_contains(lit(bytes), key)
+    if (bytes.length <= graft.expr.SketchQuery.LitMaxBytes) bloom_contains(lit(bytes), key)
     else bloom_contains(s.sparkContext.broadcast(bytes), key)
 
   /** Deterministic CLUSTERED vectors derived from the embeddings table
@@ -266,7 +261,7 @@ object SparkEntry {
         // can't silently break this, unlike plan-string matching)
         val injected = joined.queryExecution.optimizedPlan.exists(
           _.expressions.exists(_.exists {
-            case _: graft.expr.BloomMightContain => true
+            case graft.expr.SketchQuery(_, _, graft.expr.SketchOp.BloomContains) => true
             case _ => false
           }))
         val row = joined.head() // executes with the rule active
@@ -1402,7 +1397,8 @@ object SparkEntry {
           .map { case (q, rs) =>
             q -> rs.map(r => (r.getLong(1), r.getDouble(2))).toSet }
       def singleByQuery(single: Long => DataFrame): Map[Long, Set[(Long, Double)]] =
-        sampleIds.map(qid => single(qid).withColumn("__q", lit(qid)))
+        if (sampleIds.isEmpty) Map.empty // no queries: nothing to compare
+        else sampleIds.map(qid => single(qid).withColumn("__q", lit(qid)))
           .reduce(_.unionByName(_)).collect()
           .groupBy(_.getLong(2))
           .map { case (q, rs) =>
@@ -1462,7 +1458,9 @@ object SparkEntry {
         .join(labels.toDF("query_id", "qlab"), "query_id")
         .join(labels.toDF("id", "nlab"), "id")
         .agg(avg((col("qlab") === col("nlab")).cast("double")))
-        .head().getDouble(0)
+        .head()
+      // no queries: avg is NULL and the purity claim holds vacuously
+      val purityOk = purity.isNullAt(0) || purity.getDouble(0) >= 0.9
       // sample ids + vectors in ONE collect; one collect for the sampled
       // batch rows and one for the tagged union of the five single-query
       // plans (was a filter+collect pair per id) — same values compared
@@ -1474,7 +1472,8 @@ object SparkEntry {
         .collect().groupBy(_.getLong(0))
         .map { case (q, rs) =>
           q -> rs.map(r => (r.getLong(1), r.getDouble(2))).toSet }
-      val singleSample = sampleIds.map(qid =>
+      val singleSample = if (sampleIds.isEmpty) Map.empty[Long, Set[(Long, Double)]]
+        else sampleIds.map(qid =>
           graft.ops.Similarity.ivfTopKPq(index, sampleVecs(qid), cents, cb, k, nprobe = 2)
             .withColumn("__q", lit(qid)))
         .reduce(_.unionByName(_)).collect()
@@ -1486,7 +1485,7 @@ object SparkEntry {
           singleSample.getOrElse(qid, Set.empty[(Long, Double)]))
       batch.unpersist(blocking = false)
       queries.unpersist(blocking = false)
-      Seq((nQ, allK, codeBytes, purity >= 0.9, matches))
+      Seq((nQ, allK, codeBytes, purityOk, matches))
         .toDF("n_queries", "all_queries_k", "pq_code_is_m_bytes",
           "label_purity_at_least_090", "batch_matches_single")
     },

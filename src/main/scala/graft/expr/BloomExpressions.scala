@@ -87,164 +87,6 @@ case class BloomFilterAgg(
   override def prettyName: String = "bloom_agg"
 }
 
-/** Runtime helpers shared by interpreted eval and generated code. */
-object BloomRuntime {
-  // Per-thread single-entry cache keyed by byte-array identity: the filter
-  // blob is typically a literal/broadcast value, so every row in a
-  // partition sees the same array reference and parses it exactly once.
-  // The entry is dropped at task completion (a tens-of-MB filter must not
-  // stay pinned to an executor task thread for the JVM lifetime); a
-  // non-literal filter column (fresh array per row) defeats the identity
-  // key and reparses per row — use a literal/broadcast filter on hot paths.
-  private val cache = new ThreadLocal[(Array[Byte], Sbbf)]
-
-  // driver-side (no TaskContext) single-slot cache: SoftReference so the
-  // GC — not a task-completion hook, which does not exist there — bounds
-  // the blob's lifetime; without it a constant-folded probe over a
-  // LocalRelation would re-parse the same literal array per ROW
-  private val driverCache =
-    new ThreadLocal[java.lang.ref.SoftReference[(Array[Byte], Sbbf)]]
-
-  def parse(bytes: Array[Byte]): Sbbf = {
-    val c = cache.get()
-    if (c != null && (c._1 eq bytes)) c._2
-    else {
-      val tc = org.apache.spark.TaskContext.get()
-      if (tc == null) {
-        val sr = driverCache.get()
-        val entry = if (sr != null) sr.get() else null
-        if (entry != null && (entry._1 eq bytes)) entry._2
-        else {
-          val f = Sbbf.fromBytes(bytes)
-          driverCache.set(new java.lang.ref.SoftReference((bytes, f)))
-          f
-        }
-      } else {
-        val f = Sbbf.fromBytes(bytes)
-        if (c == null) tc.addTaskCompletionListener[Unit](_ => cache.remove())
-        cache.set((bytes, f))
-        f
-      }
-    }
-  }
-
-  def checkHash(filterBytes: Array[Byte], hash: Long): Boolean =
-    parse(filterBytes).checkHash(hash)
-
-  def union(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    Sbbf.fromBytes(a).orInPlace(Sbbf.fromBytes(b)).toBytes
-}
-
-/** Membership probe: `bloom_contains(filter_binary, key_hash) -> boolean`.
-  * The probe path of the reference (`item in bf`, `_abloom.c:558-566`)
-  * re-expressed as a codegen'd scalar usable in WHERE clauses for
-  * semi-join pre-filtering. May false-positive, never false-negative.
-  *
-  * When the filter side is foldable (literal / broadcast blob — the normal
-  * case) it is parsed once per executor and the generated code probes the
-  * shared [[Sbbf]] directly; otherwise a per-thread identity cache keeps
-  * re-parsing off the hot path.
-  */
-case class BloomMightContain(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = BooleanType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"bloom_contains expects (binary filter, long key hash), got (${l.sql}, ${r.sql})")
-    }
-
-  @transient private lazy val foldedFilter: Sbbf =
-    if (left.foldable) {
-      val b = left.eval(null)
-      if (b == null) null
-      else {
-        val bytes = b.asInstanceOf[Array[Byte]]
-        if (bytes.length > BloomMightContain.LitWarnBytes) {
-          // the measured 14-30x footgun: a literal filter rides every
-          // stage's task binary; the broadcast variant ships once per
-          // executor (graft.functions.bloom_contains(Broadcast, key))
-          BloomMightContain.log.warn(
-            s"bloom_contains literal filter is ${bytes.length} bytes " +
-              "(> 1 MB): prefer the broadcast variant " +
-              "bloom_contains(sparkContext.broadcast(bytes), key)")
-        }
-        Sbbf.fromBytes(bytes)
-      }
-    } else null
-
-  override def nullSafeEval(filterBytes: Any, hash: Any): Any = {
-    val f =
-      if (foldedFilter != null) foldedFilter
-      else BloomRuntime.parse(filterBytes.asInstanceOf[Array[Byte]])
-    f.checkHash(hash.asInstanceOf[Long])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    if (left.foldable && foldedFilter != null) {
-      // parse once per executor, share across all generated-code rows
-      val filterRef = ctx.addReferenceObj("sbbf", foldedFilter, classOf[Sbbf].getName)
-      defineCodeGen(ctx, ev, (_, h) => s"$filterRef.checkHash($h)")
-    } else {
-      val rt = BloomRuntime.getClass.getName.stripSuffix("$")
-      defineCodeGen(ctx, ev, (f, h) => s"$rt$$.MODULE$$.checkHash($f, $h)")
-    }
-  }
-
-  override def prettyName: String = "bloom_contains"
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BloomMightContain =
-    copy(left = newLeft, right = newRight)
-}
-
-object BloomMightContain {
-  /** Above this, a literal filter costs more in task-binary shipping than
-    * the probe saves — warn toward the broadcast variant.
-    */
-  final val LitWarnBytes: Int = 1 << 20
-  private[expr] val log = org.slf4j.LoggerFactory.getLogger(classOf[BloomMightContain])
-}
-
-/** Broadcast-variable-backed membership probe: the filter ships once per
-  * executor via torrent broadcast instead of riding inside the task binary
-  * (a 63 MB filter embedded via `lit()` costs ~2x its size in every
-  * stage's serialized plan — see BENCH/BASELINE.md §4). Parse happens once
-  * per executor (lazy), probes run through the same generated code path.
-  */
-case class BloomBroadcastContain(
-    bcast: org.apache.spark.broadcast.Broadcast[Array[Byte]],
-    child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = BooleanType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"bloom_contains(broadcast) expects a long key hash, got ${dt.sql}")
-  }
-
-  @transient private lazy val filter: Sbbf = Sbbf.fromBytes(bcast.value)
-
-  /** Executor-side probe entry used by both eval and generated code. */
-  def probe(hash: Long): Boolean = filter.checkHash(hash)
-
-  override def nullSafeEval(hash: Any): Any = probe(hash.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomBcExpr", this, classOf[BloomBroadcastContain].getName)
-    defineCodeGen(ctx, ev, h => s"$ref.probe($h)")
-  }
-
-  override def prettyName: String = "bloom_contains_bc"
-
-  override protected def withNewChildInternal(newChild: Expression): BloomBroadcastContain =
-    copy(child = newChild)
-}
-
 /** `bloom_union(a, b)` — new filter = word-wise OR of two serialized
   * filters (`__or__`, `_abloom.c:238-281`). Both sides must have identical
   * (capacity, fp_rate) or the expression throws, like the reference.
@@ -260,12 +102,10 @@ case class BloomUnion(left: Expression, right: Expression) extends BinaryExpress
     }
 
   override def nullSafeEval(a: Any, b: Any): Any =
-    BloomRuntime.union(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
+    BloomCodec.mergeBytes(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val rt = BloomRuntime.getClass.getName.stripSuffix("$")
-    defineCodeGen(ctx, ev, (a, b) => s"$rt$$.MODULE$$.union($a, $b)")
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.expr.BloomCodec$$.MODULE$$.mergeBytes($a, $b)")
 
   override def prettyName: String = "bloom_union"
 

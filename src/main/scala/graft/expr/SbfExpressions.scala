@@ -2,7 +2,7 @@ package graft.expr
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
@@ -79,123 +79,6 @@ case class SbfAgg(
     copy(child = newChildren(0), capacityExpr = newChildren(1), fpRateExpr = newChildren(2))
 
   override def prettyName: String = "sbf_agg"
-}
-
-/** Runtime parse cache for scalable filters (task-scoped identity cache,
-  * same design as [[BloomRuntime]]).
-  */
-object SbfRuntime {
-  private val cache = new ThreadLocal[(Array[Byte], Sbf)]
-
-  // driver-side (no TaskContext) single-slot cache: SoftReference so the
-  // GC — not a task-completion hook, which does not exist there — bounds
-  // the blob's lifetime; without it a constant-folded probe over a
-  // LocalRelation would re-parse the same literal array per ROW
-  private val driverCache =
-    new ThreadLocal[java.lang.ref.SoftReference[(Array[Byte], Sbf)]]
-
-  def parse(bytes: Array[Byte]): Sbf = {
-    val c = cache.get()
-    if (c != null && (c._1 eq bytes)) c._2
-    else {
-      val tc = org.apache.spark.TaskContext.get()
-      if (tc == null) {
-        val sr = driverCache.get()
-        val entry = if (sr != null) sr.get() else null
-        if (entry != null && (entry._1 eq bytes)) entry._2
-        else {
-          val f = Sbf.fromBytes(bytes)
-          driverCache.set(new java.lang.ref.SoftReference((bytes, f)))
-          f
-        }
-      } else {
-        val f = Sbf.fromBytes(bytes)
-        if (c == null) tc.addTaskCompletionListener[Unit](_ => cache.remove())
-        cache.set((bytes, f))
-        f
-      }
-    }
-  }
-
-  def checkHash(filterBytes: Array[Byte], hash: Long): Boolean =
-    parse(filterBytes).checkHash(hash)
-}
-
-/** `sbf_contains(filter, key_hash)` — OR across stages; zero FN. */
-case class SbfContains(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = BooleanType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"sbf_contains expects (binary filter, long key hash), got (${l.sql}, ${r.sql})")
-    }
-
-  @transient private lazy val foldedFilter: Sbf =
-    if (left.foldable) {
-      val b = left.eval(null)
-      if (b == null) null else Sbf.fromBytes(b.asInstanceOf[Array[Byte]])
-    } else null
-
-  override def nullSafeEval(filterBytes: Any, hash: Any): Any = {
-    val f =
-      if (foldedFilter != null) foldedFilter
-      else SbfRuntime.parse(filterBytes.asInstanceOf[Array[Byte]])
-    f.checkHash(hash.asInstanceOf[Long])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    if (left.foldable && foldedFilter != null) {
-      val ref = ctx.addReferenceObj("sbf", foldedFilter, classOf[Sbf].getName)
-      defineCodeGen(ctx, ev, (_, h) => s"$ref.checkHash($h)")
-    } else {
-      val rt = SbfRuntime.getClass.getName.stripSuffix("$")
-      defineCodeGen(ctx, ev, (f, h) => s"$rt$$.MODULE$$.checkHash($f, $h)")
-    }
-  }
-
-  override def prettyName: String = "sbf_contains"
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SbfContains =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Broadcast-backed SBF membership probe: a grown stage series over a
-  * large stream crosses the ~1 MB "ship it as a literal" line — the
-  * broadcast variant sends the blob once per executor and parses it once
-  * (cf. [[BloomBroadcastContain]]).
-  */
-case class SbfBroadcastContains(
-    bcast: org.apache.spark.broadcast.Broadcast[Array[Byte]],
-    child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = BooleanType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"sbf_contains(broadcast) expects a long key hash, got ${dt.sql}")
-  }
-
-  @transient private lazy val filter: Sbf = Sbf.fromBytes(bcast.value)
-
-  def probe(hash: Long): Boolean = filter.checkHash(hash)
-
-  override def nullSafeEval(hash: Any): Any = probe(hash.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("sbfBcExpr", this, classOf[SbfBroadcastContains].getName)
-    defineCodeGen(ctx, ev, h => s"$ref.probe($h)")
-  }
-
-  override def prettyName: String = "sbf_contains_bc"
-
-  override protected def withNewChildInternal(newChild: Expression): SbfBroadcastContains =
-    copy(child = newChild)
 }
 
 /** `sbf_describe(filter)` -> struct(initial_capacity, fp0, growth,

@@ -1,6 +1,10 @@
 package graft.expr
 
+import java.lang.ref.SoftReference
+
 import scala.reflect.ClassTag
+
+import org.apache.spark.TaskContext
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -18,7 +22,7 @@ import graft.core.{Cbf, CountMin, Hll, Kll, Kmv, KmvSample, MisraGries, Sbbf, Sb
   *
   * One codec per family serves the union aggregate ([[SketchUnionAgg]]),
   * the checkpointed build's tree merge ([[graft.job.PartitionSketcher]])
-  * and the scalar query expressions' parse cache ([[parse]]).
+  * and the query expressions' parse cache ([[parse]], [[SketchQuery]]).
   *
   * @param family the SQL name prefix (`hll` for `hll_union_agg`)
   * @param merge  the core's merge; may update and return its first argument
@@ -44,19 +48,45 @@ class SketchCodec[S <: AnyRef](
   final def finishBytes(bytes: Array[Byte]): Array[Byte] =
     finish.fold(bytes)(f => toBytes(f(fromBytes(bytes))))
 
-  // per-thread cache keyed by byte-array identity: a scalar query's sketch
-  // blob is typically a literal, so each thread parses it once
-  @transient private[this] lazy val cache = new ThreadLocal[(Array[Byte], S)]
+  // Per-thread single slot keyed by byte-array identity: a query's sketch
+  // blob is typically one array for a whole task (a subquery result, a
+  // broadcast value), so each thread parses it once. On an executor the
+  // slot is released when the task completes — a tens-of-MB filter must
+  // not stay pinned to a task thread for the JVM's life. On the driver
+  // (no TaskContext, no completion hook) a SoftReference lets the GC bound
+  // it; without a slot there, a probe constant-folded over a LocalRelation
+  // would re-parse the same array per row. A sketch column holding a fresh
+  // array per row misses and re-parses.
+  @transient private[this] lazy val taskSlot = new ThreadLocal[(Array[Byte], S)]
+  @transient private[this] lazy val driverSlot = new ThreadLocal[SoftReference[(Array[Byte], S)]]
 
   final def parse(bytes: Array[Byte]): S = {
-    val c = cache.get()
+    val c = taskSlot.get()
     if (c != null && (c._1 eq bytes)) c._2
-    else { val s = fromBytes(bytes); cache.set((bytes, s)); s }
+    else {
+      val tc = TaskContext.get()
+      if (tc == null) {
+        val sr = driverSlot.get()
+        val e = if (sr != null) sr.get() else null
+        if (e != null && (e._1 eq bytes)) e._2
+        else { val s = fromBytes(bytes); driverSlot.set(new SoftReference((bytes, s))); s }
+      } else {
+        val s = fromBytes(bytes)
+        if (c == null) tc.addTaskCompletionListener[Unit](_ => taskSlot.remove())
+        taskSlot.set((bytes, s))
+        s
+      }
+    }
   }
+
+  /** True when this thread's executor slot holds no parsed sketch. */
+  private[expr] def taskSlotEmpty: Boolean = taskSlot.get() == null
+
+  private[expr] def sketchClass: Class[_] = tag.runtimeClass
 
   /** Java source for [[parse]] in generated code, typed as the sketch. */
   private[expr] def parseCode(bytes: String): String =
-    s"((${tag.runtimeClass.getName}) ${getClass.getName}.MODULE$$.parse($bytes))"
+    s"((${sketchClass.getName}) ${getClass.getName}.MODULE$$.parse($bytes))"
 
   override def toString: String = family
 }
@@ -77,7 +107,10 @@ object KllCodec extends SketchCodec[Kll]("kll", Kll.fromBytes, _.merge(_), _.toB
 object MgCodec extends SketchCodec[MisraGries]("mg", MisraGries.fromBytes, _.merge(_), _.toBytes)
 
 object SketchCodec {
-  val all: Seq[SketchCodec[_ <: AnyRef]] = Seq(
+  // lazy: each codec object's constructor reads `finish`'s default from
+  // this companion, so a strict list built while the first-touched codec
+  // is still initializing would hold null for it
+  lazy val all: Seq[SketchCodec[_ <: AnyRef]] = Seq(
     BloomCodec, CbfCodec, SbfCodec, HllCodec, KmvCodec, KmvSampleCodec,
     WeightedSampleCodec, CmsCodec, TDigestCodec, KllCodec, MgCodec)
 }

@@ -183,28 +183,6 @@ case class CmsAgg(
   override def prettyName: String = "cms_agg"
 }
 
-/** `cms_query(sketch_binary, key_hash) -> bigint` — overestimate-only
-  * frequency: true <= result <= true + eps * N w.p. 1 - delta.
-  */
-case class CmsQuery(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"cms_query expects (binary, long key hash), got (${l.sql}, ${r.sql})")
-    }
-  override def nullSafeEval(sketch: Any, hash: Any): Any =
-    CmsCodec.parse(sketch.asInstanceOf[Array[Byte]])
-      .queryHash(hash.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, h) =>
-      CmsCodec.parseCode(s) + s".queryHash($h)")
-  override def prettyName: String = "cms_query"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CmsQuery =
-    copy(left = l, right = r)
-}
-
 /** `cms_inner_product(a, b) -> bigint` — AMS/CMS estimate of the inner
   * product sum_k fA(k)*fB(k) = the equi-join cardinality of the two key
   * streams. Never underestimates; over by <= eps*totalA*totalB w.p.
@@ -275,46 +253,6 @@ case class TDigestAgg(
   override def prettyName: String = "tdigest_agg"
 }
 
-/** `tdigest_quantile(sketch, q) -> double`. */
-case class TDigestQuantile(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, DoubleType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"tdigest_quantile expects (binary, double), got (${l.sql}, ${r.sql})")
-    }
-  override def nullSafeEval(sketch: Any, q: Any): Any =
-    TDigestCodec.parse(sketch.asInstanceOf[Array[Byte]])
-      .quantile(q.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, q) =>
-      TDigestCodec.parseCode(s) + s".quantile($q)")
-  override def prettyName: String = "tdigest_quantile"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): TDigestQuantile =
-    copy(left = l, right = r)
-}
-
-/** `tdigest_cdf(sketch, x) -> double`. */
-case class TDigestCdf(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, DoubleType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"tdigest_cdf expects (binary, double), got (${l.sql}, ${r.sql})")
-    }
-  override def nullSafeEval(sketch: Any, x: Any): Any =
-    TDigestCodec.parse(sketch.asInstanceOf[Array[Byte]])
-      .cdf(x.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, x) =>
-      TDigestCodec.parseCode(s) + s".cdf($x)")
-  override def prettyName: String = "tdigest_cdf"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): TDigestCdf =
-    copy(left = l, right = r)
-}
-
 // ------------------------------------------------------------------- KLL
 
 /** `kll_agg(value_double, k) -> binary`. */
@@ -358,46 +296,6 @@ case class KllAgg(
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KllAgg =
     copy(child = c(0), kExpr = c(1))
   override def prettyName: String = "kll_agg"
-}
-
-/** `kll_quantile(sketch, q) -> double`. */
-case class KllQuantile(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, DoubleType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"kll_quantile expects (binary, double), got (${l.sql}, ${r.sql})")
-    }
-  override def nullSafeEval(sketch: Any, q: Any): Any =
-    KllCodec.parse(sketch.asInstanceOf[Array[Byte]])
-      .quantile(q.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, q) =>
-      KllCodec.parseCode(s) + s".quantile($q)")
-  override def prettyName: String = "kll_quantile"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): KllQuantile =
-    copy(left = l, right = r)
-}
-
-/** `kll_rank(sketch, x) -> double`. */
-case class KllRank(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, DoubleType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"kll_rank expects (binary, double), got (${l.sql}, ${r.sql})")
-    }
-  override def nullSafeEval(sketch: Any, x: Any): Any =
-    KllCodec.parse(sketch.asInstanceOf[Array[Byte]])
-      .rank(x.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, x) =>
-      KllCodec.parseCode(s) + s".rank($x)")
-  override def prettyName: String = "kll_rank"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): KllRank =
-    copy(left = l, right = r)
 }
 
 /** Runtime helpers of the scalar query expressions; single-sketch parses

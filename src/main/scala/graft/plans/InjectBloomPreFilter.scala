@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
-import graft.expr.{AbloomKeyHash, BloomFilterAgg, BloomMightContain}
+import graft.expr.{AbloomKeyHash, BloomFilterAgg, SketchOp, SketchQuery}
 
 /** Automatic ABLM bloom pre-filter injection for equi-joins — the
   * optimizer-rule counterpart of the manual `bloom_contains` pattern in
@@ -102,7 +102,7 @@ object InjectBloomPreFilter extends Rule[LogicalPlan] with PredicateHelper {
   private def hasBloomFilter(plan: LogicalPlan): Boolean =
     plan.exists {
       case Filter(cond, _) => cond.exists {
-        case _: BloomMightContain => true
+        case SketchQuery(_, _, SketchOp.BloomContains) => true
         case _ => false
       }
       case _ => false
@@ -142,7 +142,7 @@ object InjectBloomPreFilter extends Rule[LogicalPlan] with PredicateHelper {
     val agg = BloomFilterAgg(AbloomKeyHash(cKey), Literal(capacity), Literal(fpRate))
       .toAggregateExpression()
     val build = Aggregate(Nil, Seq(Alias(agg, "graftBloomFilter")()), pruned)
-    Filter(BloomMightContain(ScalarSubquery(build), AbloomKeyHash(appKey)), app)
+    Filter(SketchQuery(ScalarSubquery(build), AbloomKeyHash(appKey), SketchOp.BloomContains), app)
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =

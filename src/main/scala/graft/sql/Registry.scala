@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.expr._
 
@@ -21,7 +21,9 @@ object Registry {
   /** (name, builder) for every SQL-exposed function. Aggregates are
     * returned unwrapped — the analyzer wraps AggregateFunction in
     * AggregateExpression during resolution. The `*_union_agg` entries
-    * come from [[SketchCodec.all]], one per family codec.
+    * come from [[SketchCodec.all]], one per family codec, and the sketch
+    * queries from [[SketchOp.all]]: a key query hashes its key, the others
+    * cast their argument to double.
     */
   type Builder = Seq[Expression] => Expression
 
@@ -32,10 +34,6 @@ object Registry {
       val fp = if (args.size == 3) args(2)
         else org.apache.spark.sql.catalyst.expressions.Literal(0.01) // reference default
       BloomFilterAgg(AbloomKeyHash(args(0)), args(1), fp)
-    },
-    "bloom_contains" -> { args =>
-      require(args.size == 2, "bloom_contains(filter, key)")
-      BloomMightContain(args(0), AbloomKeyHash(args(1)))
     },
     "bloom_union" -> { args =>
       require(args.size == 2, "bloom_union(a, b)")
@@ -66,14 +64,6 @@ object Registry {
       CbfAgg(AbloomKeyHash(args(0)),
         Cast(args(1), org.apache.spark.sql.types.IntegerType), args(2), fp)
     },
-    "cbf_contains" -> { args =>
-      require(args.size == 2, "cbf_contains(filter, key)")
-      CbfContains(args(0), AbloomKeyHash(args(1)))
-    },
-    "cbf_count" -> { args =>
-      require(args.size == 2, "cbf_count(filter, key)")
-      CbfCount(args(0), AbloomKeyHash(args(1)))
-    },
     "sbf_agg" -> { args =>
       require(args.size == 1 || args.size == 3, "sbf_agg(key[, initial_capacity, fp_rate])")
       val cap = if (args.size == 3) args(1)
@@ -81,10 +71,6 @@ object Registry {
       val fp = if (args.size == 3) args(2)
         else org.apache.spark.sql.catalyst.expressions.Literal(0.001)
       SbfAgg(AbloomKeyHash(args(0)), cap, fp)
-    },
-    "sbf_contains" -> { args =>
-      require(args.size == 2, "sbf_contains(filter, key)")
-      SbfContains(args(0), AbloomKeyHash(args(1)))
     },
     "sbf_describe" -> { args => SbfDescribe(args.head) },
     "hll_agg" -> { args =>
@@ -130,10 +116,6 @@ object Registry {
       require(args.size == 3, "cms_agg(key, eps, delta)")
       CmsAgg(AbloomKeyHash(args(0)), args(1), args(2))
     },
-    "cms_query" -> { args =>
-      require(args.size == 2, "cms_query(sketch, key)")
-      CmsQuery(args(0), AbloomKeyHash(args(1)))
-    },
     "cms_inner_product" -> { args =>
       require(args.size == 2, "cms_inner_product(a, b)")
       CmsInnerProduct(args(0), args(1))
@@ -143,8 +125,6 @@ object Registry {
         else org.apache.spark.sql.catalyst.expressions.Literal(graft.core.TDigest.DefaultCompression)
       TDigestAgg(Cast(args(0), DoubleType), c)
     },
-    "tdigest_quantile" -> { args => TDigestQuantile(args(0), Cast(args(1), DoubleType)) },
-    "tdigest_cdf" -> { args => TDigestCdf(args(0), Cast(args(1), DoubleType)) },
     "kll_agg" -> { args =>
       val k = if (args.size > 1) args(1)
         else org.apache.spark.sql.catalyst.expressions.Literal(graft.core.Kll.DefaultK)
@@ -158,8 +138,6 @@ object Registry {
       require(args.size == 2, "mg_topk(sketch, m)")
       MgTopK(args(0), Cast(args(1), org.apache.spark.sql.types.IntegerType))
     },
-    "kll_quantile" -> { args => KllQuantile(args(0), Cast(args(1), DoubleType)) },
-    "kll_rank" -> { args => KllRank(args(0), Cast(args(1), DoubleType)) },
     "doc_fingerprint" -> { args =>
       require(args.size == 1, "doc_fingerprint(text)")
       DocFingerprint(args.head)
@@ -260,6 +238,12 @@ object Registry {
         .toAggregateExpression()
     }) ++ SketchCodec.all.map { codec =>
       s"${codec.family}_union_agg" -> { (args: Seq[Expression]) => SketchUnionAgg(args.head, codec) }
+    } ++ SketchOp.all.map { op =>
+      op.name -> { (args: Seq[Expression]) =>
+        val key = op.argType == LongType
+        require(args.size == 2, s"${op.name}(sketch, ${if (key) "key" else "x"})")
+        SketchQuery(args(0), if (key) AbloomKeyHash(args(1)) else Cast(args(1), DoubleType), op)
+      }
     }
 
   private def foldableInt(e: Expression, name: String): Int = {

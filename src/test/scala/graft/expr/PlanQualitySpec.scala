@@ -37,15 +37,19 @@ class PlanQualitySpec extends SparkTestBase {
   test("probeFilter is size-gated: literal below 1 MB, broadcast above") {
     import org.apache.spark.sql.GraftBridge
     val small = new Array[Byte](1024)
-    val big = new Array[Byte](graft.SparkEntry.FilterLitMaxBytes + 1)
+    val big = new Array[Byte](SketchQuery.LitMaxBytes + 1)
     val smallExpr = GraftBridge.expression(
       graft.SparkEntry.probeFilter(spark, small, col("k")))
     val bigExpr = GraftBridge.expression(
       graft.SparkEntry.probeFilter(spark, big, col("k")))
-    assert(smallExpr.isInstanceOf[BloomMightContain],
-      s"small filter should ship as a literal, got $smallExpr")
-    assert(bigExpr.isInstanceOf[BloomBroadcastContain],
-      s"large filter must ship as a broadcast, got $bigExpr")
+    assert(smallExpr match {
+      case SketchQuery(_, _, SketchOp.BloomContains) => true
+      case _ => false
+    }, s"small filter should ship as a literal, got $smallExpr")
+    assert(bigExpr match {
+      case SketchBroadcastQuery(_, _, SketchOp.BloomContains) => true
+      case _ => false
+    }, s"large filter must ship as a broadcast, got $bigExpr")
   }
 
   test("dedup LSH pipelines contain no cartesian product") {

@@ -294,4 +294,21 @@ class BatchServingSpec extends AnyFunSuite with SparkTestBase {
     }
     assert(err2.getMessage.contains("maxQueryRows"))
   }
+
+  test("ann_batch_serving and ann_ivf_pq answer an empty query set") {
+    // both queries take the vectors with vec_id % 50 == 3 as their queries
+    val dir = java.nio.file.Files.createTempDirectory("graft-no-queries-sf").toString
+    try {
+      randVecs(500, 32).filter(_._1 % 50 != 3)
+        .map { case (id, v) => (id, v.map(_.toFloat), (id % 10).toInt) }
+        .toDF("vec_id", "embedding", "label").write.parquet(s"$dir/embeddings.parquet")
+      for (q <- Seq("ann_batch_serving", "ann_ivf_pq")) {
+        val row = graft.SparkEntry.queries(q)(spark, dir).collect().toSeq
+        assert(row.size == 1, q)
+        assert(row.head.getLong(0) == 0L, s"$q: no queries")
+        (1 until row.head.length).foreach(i =>
+          assert(row.head.getBoolean(i), s"$q: ${row.head.schema(i).name} holds vacuously"))
+      }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
 }

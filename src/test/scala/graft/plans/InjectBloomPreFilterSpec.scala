@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join}
 import org.apache.spark.sql.functions.col
 
 import graft.SparkTestBase
-import graft.expr.BloomMightContain
+import graft.expr.{SketchOp, SketchQuery}
 
 /** The automatic ABLM bloom join pre-filter rule: injection conditions,
   * join-type safety matrix, and end-to-end result equivalence.
@@ -12,6 +12,11 @@ import graft.expr.BloomMightContain
 class InjectBloomPreFilterSpec extends SparkTestBase {
 
   import SparkTestBase.spark.implicits._
+
+  private val isBloomProbe: org.apache.spark.sql.catalyst.expressions.Expression => Boolean = {
+    case SketchQuery(_, _, SketchOp.BloomContains) => true
+    case _ => false
+  }
 
   private def withConf[A](pairs: (String, String)*)(f: => A): A = {
     pairs.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -65,12 +70,12 @@ class InjectBloomPreFilterSpec extends SparkTestBase {
       val lo = left.join(right, col("k") === col("j"), "left_outer")
       val opt = lo.queryExecution.optimizedPlan
       val bloomFilters = opt.collect {
-        case f: Filter if f.condition.exists(_.isInstanceOf[BloomMightContain]) => f
+        case f: Filter if f.condition.exists(isBloomProbe) => f
       }
       assert(bloomFilters.size === 1, s"exactly the right side pruned:\n$opt")
       val j = opt.collectFirst { case jn: Join => jn }.get
       assert(!j.left.exists {
-        case f: Filter => f.condition.exists(_.isInstanceOf[BloomMightContain])
+        case f: Filter => f.condition.exists(isBloomProbe)
         case _ => false
       }, "left outer must keep unmatched left rows -> left side unpruned")
       // all 5000 left rows survive
@@ -87,7 +92,7 @@ class InjectBloomPreFilterSpec extends SparkTestBase {
       val opt = large.join(small, col("k") === col("j"), "left_semi")
         .queryExecution.optimizedPlan
       val n = opt.collect {
-        case f: Filter if f.condition.exists(_.isInstanceOf[BloomMightContain]) => f
+        case f: Filter if f.condition.exists(isBloomProbe) => f
       }.size
       assert(n <= 2, s"one bloom filter per prunable side at most:\n$opt")
       assert(n >= 1)
