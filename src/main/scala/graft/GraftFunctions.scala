@@ -27,6 +27,12 @@ object functions {
 
   private def lit(v: Any): Expression = Literal(v)
 
+  /** The kernel's build aggregate over `inputs` (adapted to the kernel's
+    * input types: keys hashed, numbers cast) and constant `params`. */
+  private def build(kernel: SketchKernel[_ <: AnyRef], inputs: Column*)(params: Any*): Column =
+    toCol(kernel(kernel.inputs.zip(inputs).map { case (in, c) => in.adapt(toExpr(c)) },
+      params.map(lit)).toAggregateExpression())
+
   private[graft] def union_agg(sketches: Column, codec: SketchCodec[_ <: AnyRef]): Column =
     toCol(SketchUnionAgg(toExpr(sketches), codec).toAggregateExpression())
 
@@ -56,8 +62,7 @@ object functions {
     * serializable=True)` fed the same keys.
     */
   def bloom_agg(key: Column, capacity: Long, fpRate: Double): Column =
-    toCol(BloomFilterAgg(AbloomKeyHash(toExpr(key)), lit(capacity), lit(fpRate))
-      .toAggregateExpression())
+    build(BloomKernel, key)(capacity, fpRate)
 
   def bloom_agg(key: Column, capacity: Long): Column =
     bloom_agg(key, capacity, 0.01)
@@ -66,8 +71,7 @@ object functions {
     * Keeps the hash inside whole-stage codegen upstream of the aggregate.
     */
   def bloom_agg_hashed(keyHash: Column, capacity: Long, fpRate: Double): Column =
-    toCol(BloomFilterAgg(toExpr(keyHash), lit(capacity), lit(fpRate))
-      .toAggregateExpression())
+    toCol(BloomKernel(Seq(toExpr(keyHash)), Seq(lit(capacity), lit(fpRate))).toAggregateExpression())
 
   /** Membership probe; may false-positive, never false-negative. */
   def bloom_contains(filter: Column, key: Column): Column =
@@ -123,10 +127,7 @@ object functions {
     * inserts and deletes.
     */
   def cbf_agg(key: Column, weight: Column, capacity: Long, fpRate: Double): Column =
-    toCol(CbfAgg(AbloomKeyHash(toExpr(key)),
-      org.apache.spark.sql.catalyst.expressions.Cast(toExpr(weight),
-        org.apache.spark.sql.types.IntegerType),
-      lit(capacity), lit(fpRate)).toAggregateExpression())
+    build(CbfKernel, key, weight)(capacity, fpRate)
 
   /** Insert-only counting build (weight 1 per row). */
   def cbf_agg(key: Column, capacity: Long, fpRate: Double): Column =
@@ -164,8 +165,7 @@ object functions {
     * fp0 / (1 - 0.9) per partition lineage; zero false negatives always.
     */
   def sbf_agg(key: Column, initialCapacity: Long, fp0: Double): Column =
-    toCol(SbfAgg(AbloomKeyHash(toExpr(key)), lit(initialCapacity), lit(fp0))
-      .toAggregateExpression())
+    build(SbfKernel, key)(initialCapacity, fp0)
 
   def sbf_agg(key: Column): Column = sbf_agg(key, 4096, 0.001)
 
@@ -197,8 +197,7 @@ object functions {
       org.apache.spark.sql.types.DoubleType)
 
   /** HyperLogLog distinct-count sketch (std error 1.04/sqrt(2^p)). */
-  def hll_agg(key: Column, p: Int): Column =
-    toCol(HllAgg(AbloomKeyHash(toExpr(key)), lit(p)).toAggregateExpression())
+  def hll_agg(key: Column, p: Int): Column = build(HllKernel, key)(p)
   def hll_agg(key: Column): Column = hll_agg(key, graft.core.Hll.DefaultP)
 
   /** Register-wise-max merge of a column of stored HLL sketches.
@@ -215,8 +214,7 @@ object functions {
     toCol(HllIntersectEstimate(toExpr(a), toExpr(b)))
 
   /** KMV bottom-k distinct sketch: EXACT below k, RSE ~ 1/sqrt(k-2) above. */
-  def kmv_agg(key: Column, k: Int): Column =
-    toCol(KmvAgg(AbloomKeyHash(toExpr(key)), lit(k)).toAggregateExpression())
+  def kmv_agg(key: Column, k: Int): Column = build(KmvKernel, key)(k)
   def kmv_agg(key: Column): Column = kmv_agg(key, graft.core.Kmv.DefaultK)
 
   /** Bottom-k merge of a column of stored KMV sketches. $unionContract */
@@ -239,8 +237,7 @@ object functions {
     * below k.
     */
   def kmv_sample_agg(key: Column, payload: Column, k: Int): Column =
-    toCol(KmvSampleAgg(AbloomKeyHash(toExpr(key)), toExpr(payload), lit(k))
-      .toAggregateExpression())
+    build(KmvSampleKernel, key, payload)(k)
   def kmv_sample_agg(key: Column, payload: Column): Column =
     kmv_sample_agg(key, payload, graft.core.Kmv.DefaultK)
 
@@ -265,11 +262,7 @@ object functions {
     */
   def weighted_sample_agg(
       key: Column, weight: Column, payload: Column, k: Int): Column =
-    toCol(WeightedSampleAgg(
-      AbloomKeyHash(toExpr(key)),
-      org.apache.spark.sql.catalyst.expressions.Cast(toExpr(weight),
-        org.apache.spark.sql.types.DoubleType),
-      toExpr(payload), lit(k)).toAggregateExpression())
+    build(WeightedSampleKernel, key, weight, payload)(k)
 
   /** Top-priority merge of a column of stored weighted samples.
     * $unionContract */
@@ -285,8 +278,7 @@ object functions {
 
   /** Count-min frequency sketch: estimate in [true, true + eps*N] w.p. 1-delta. */
   def cms_agg(key: Column, eps: Double, delta: Double): Column =
-    toCol(CmsAgg(AbloomKeyHash(toExpr(key)), lit(eps), lit(delta))
-      .toAggregateExpression())
+    build(CmsKernel, key)(eps, delta)
 
   /** Cell-wise-add merge of a column of stored count-min sketches.
     * $unionContract */
@@ -302,7 +294,7 @@ object functions {
 
   /** Merging t-digest quantile sketch (compression delta, default 100). */
   def tdigest_agg(value: Column, compression: Double): Column =
-    toCol(TDigestAgg(castDouble(value), lit(compression)).toAggregateExpression())
+    build(TDigestKernel, value)(compression)
   def tdigest_agg(value: Column): Column =
     tdigest_agg(value, graft.core.TDigest.DefaultCompression)
 
@@ -315,8 +307,7 @@ object functions {
     query(SketchOp.TDigestCdf, sketch, castDouble(x))
 
   /** KLL quantile sketch (additive rank error ~2.5/k). */
-  def kll_agg(value: Column, k: Int): Column =
-    toCol(KllAgg(castDouble(value), lit(k)).toAggregateExpression())
+  def kll_agg(value: Column, k: Int): Column = build(KllKernel, value)(k)
   def kll_agg(value: Column): Column = kll_agg(value, graft.core.Kll.DefaultK)
 
   /** Compactor merge of a column of stored KLL sketches. $unionContract */
@@ -326,8 +317,7 @@ object functions {
     * frequent-items summary (counter <= true <= counter + err,
     * err <= n/(k+1); EXACT when distinct keys <= k). Returns ABMG bytes.
     */
-  def mg_agg(key: Column, k: Int): Column =
-    toCol(MgAgg(toExpr(key), lit(k)).toAggregateExpression())
+  def mg_agg(key: Column, k: Int): Column = build(MgKernel, key)(k)
 
   /** Merge a column of stored heavy-hitter summaries. $unionContract */
   def mg_union_agg(sketches: Column): Column = union_agg(sketches, MgCodec)

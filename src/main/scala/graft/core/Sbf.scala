@@ -32,8 +32,8 @@ package graft.core
   *    merge order or tree over the same partials;
   *  - [[compact]] is an EXPLICIT deterministic step (canonical sort,
   *    then greedy OR-fold of same-parameter stages under capacity),
-  *    applied once at finalization ([[graft.expr.SbfAgg]] runs it in
-  *    `eval`, never in `merge`/`serialize`) — also a pure function of
+  *    applied once at finalization (`sbf_agg`'s [[graft.expr.SbfKernel]]
+  *    runs it in `eval`, never in `merge`/`serialize`) — also a pure function of
   *    the multiset, so finalized bytes are merge-order-canonical too.
   *
   * Memory shape: deferring compaction keeps every partial's stages until

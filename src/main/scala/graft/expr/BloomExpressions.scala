@@ -3,89 +3,11 @@ package graft.expr
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionDescription, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 import graft.core.{Hashing, Sbbf}
-
-/** Distributed SBBF build: a mergeable typed aggregate whose buffer IS the
-  * filter. The Spark execution trace mirrors the reference's build path
-  * (SURVEY.md §3): per-partition `update` = hash+insert (`bloom_insert`),
-  * the partial->final exchange ships ABLM v2 bytes (`to_bytes`), and
-  * `merge` is the word-wise OR (`__ior__`) whose algebraic laws
-  * (commutative/associative/idempotent) make partial aggregation correct
-  * under any partitioning.
-  *
-  * `child` must be the pre-computed 64-bit key hash ([[AbloomKeyHash]]) —
-  * one hash per key, computed inside whole-stage codegen upstream of the
-  * aggregate, exactly the reference's "one hash, reuse upper/lower halves"
-  * design (`_abloom.c:132-135`).
-  *
-  * At 100 TB scale: the map side reduces each partition to one
-  * `capacity`-sized bitset before any shuffle, so the exchange volume is
-  * O(partitions x filter_size), independent of row count.
-  */
-case class BloomFilterAgg(
-    child: Expression,
-    capacityExpr: Expression,
-    fpRateExpr: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Sbbf] {
-
-  def this(child: Expression, capacityExpr: Expression, fpRateExpr: Expression) =
-    this(child, capacityExpr, fpRateExpr, 0, 0)
-
-  // SQL numeric literals may arrive as Decimal (e.g. `0.01`), Scala API as Long/Double
-  private lazy val capacity: Long = capacityExpr.eval() match {
-    case d: Decimal => d.toLong
-    case n: Number => n.longValue()
-  }
-  private lazy val fpRate: Double = fpRateExpr.eval() match {
-    case d: Decimal => d.toDouble
-    case n: Number => n.doubleValue()
-  }
-
-  override def children: Seq[Expression] = Seq(child, capacityExpr, fpRateExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (child.dataType != LongType)
-      TypeCheckResult.TypeCheckFailure(
-        s"bloom_agg expects a 64-bit key hash (use abloom_key_hash), got ${child.dataType.sql}")
-    else if (!capacityExpr.foldable || !fpRateExpr.foldable)
-      TypeCheckResult.TypeCheckFailure("capacity and fp_rate must be constants")
-    else TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def createAggregationBuffer(): Sbbf = Sbbf.empty(capacity, fpRate)
-
-  override def update(buffer: Sbbf, input: InternalRow): Sbbf = {
-    val v = child.eval(input)
-    if (v != null) buffer.insertHash(v.asInstanceOf[Long])
-    buffer
-  }
-
-  override def merge(buffer: Sbbf, other: Sbbf): Sbbf = buffer.orInPlace(other)
-
-  override def eval(buffer: Sbbf): Any = buffer.toBytes
-
-  /** Shuffle format == wire format == checkpoint format (ABLM v2). */
-  override def serialize(buffer: Sbbf): Array[Byte] = buffer.toBytes
-  override def deserialize(bytes: Array[Byte]): Sbbf = Sbbf.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BloomFilterAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BloomFilterAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): BloomFilterAgg =
-    copy(child = newChildren(0), capacityExpr = newChildren(1), fpRateExpr = newChildren(2))
-
-  override def prettyName: String = "bloom_agg"
-}
 
 /** `bloom_union(a, b)` — new filter = word-wise OR of two serialized
   * filters (`__or__`, `_abloom.c:238-281`). Both sides must have identical

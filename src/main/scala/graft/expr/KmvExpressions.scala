@@ -3,65 +3,17 @@ package graft.expr
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 import graft.core.Kmv
 
-/** KMV (bottom-k / theta-style) sketch expressions — the same
-  * TypedImperativeAggregate + binary-wire shape as the HLL/CMS family.
-  * KMV's niche vs HLL: EXACT below k (estimates and set operations are
+/** KMV (bottom-k / theta-style) sketch expressions over
+  * [[KmvKernel]]'s builds. KMV's niche vs HLL: EXACT below k (estimates and set operations are
   * true set computations until the sketch saturates) and a principled
   * single-threshold intersection estimator instead of inclusion-
   * exclusion over three compounding estimates.
   */
-
-/** `kmv_agg(key_hash, k) -> binary` — merge = union of bottom-k sets
-  * (idempotent; the wire bytes are merge-order canonical because the
-  * state is a sorted duplicate-free set).
-  */
-case class KmvAgg(
-    child: Expression,
-    kExpr: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Kmv] {
-
-  private lazy val k: Int = kExpr.eval() match {
-    case d: Decimal => d.toInt
-    case n: Number => n.intValue()
-  }
-
-  override def children: Seq[Expression] = Seq(child, kExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != LongType)
-      TypeCheckResult.TypeCheckFailure(
-        s"kmv_agg expects a 64-bit key hash (use abloom_key_hash), got ${child.dataType.sql}")
-    else if (!kExpr.foldable)
-      TypeCheckResult.TypeCheckFailure("k must be a constant")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def createAggregationBuffer(): Kmv = Kmv.empty(k)
-  override def update(buffer: Kmv, input: InternalRow): Kmv = {
-    val v = child.eval(input)
-    if (v != null) buffer.add(v.asInstanceOf[Long])
-    buffer
-  }
-  override def merge(buffer: Kmv, other: Kmv): Kmv = buffer.mergeIn(other)
-  override def eval(buffer: Kmv): Any = buffer.toBytes
-  override def serialize(buffer: Kmv): Array[Byte] = buffer.toBytes
-  override def deserialize(bytes: Array[Byte]): Kmv = Kmv.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): KmvAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): KmvAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KmvAgg =
-    copy(child = c(0), kExpr = c(1))
-  override def prettyName: String = "kmv_agg"
-}
 
 /** `kmv_estimate(sketch) -> bigint` — exact size below k, (k-1)/theta
   * rounded at/above.

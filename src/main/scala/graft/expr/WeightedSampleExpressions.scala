@@ -3,108 +3,17 @@ package graft.expr
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{KmvSample, WeightedSample}
+import graft.core.WeightedSample
 
-/** Weighted distinct-sample expressions (Efraimidis-Spirakis A-RES
-  * bottom-k by priority) — same TypedImperativeAggregate +
-  * content-canonical binary-wire shape as the KMV sample family.
+/** Weighted distinct-sample query expressions (Efraimidis-Spirakis A-RES
+  * bottom-k by priority); the build is [[WeightedSampleKernel]].
   */
-
-/** `weighted_sample_agg(key_hash, weight, payload, k) -> binary` —
-  * retain the k distinct keys with the largest priorities
-  * u(hash)^(1/weight). Rows with a null key, an invalid weight (null,
-  * NaN, infinite, or below [[WeightedSample.MinWeight]] — subnormals
-  * would make 1/w overflow) or a null payload are skipped.
-  */
-case class WeightedSampleAgg(
-    child: Expression,
-    weight: Expression,
-    payload: Expression,
-    kExpr: Expression,
-    override val mutableAggBufferOffset: Int = 0,
-    override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[WeightedSample] {
-
-  private lazy val k: Int = kExpr.eval() match {
-    case d: Decimal => d.toInt
-    case n: Number => n.intValue()
-  }
-
-  override def children: Seq[Expression] = Seq(child, weight, payload, kExpr)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != LongType)
-      TypeCheckResult.TypeCheckFailure(
-        s"weighted_sample_agg expects a 64-bit key hash (use abloom_key_hash), got ${child.dataType.sql}")
-    else if (weight.dataType != DoubleType)
-      TypeCheckResult.TypeCheckFailure(
-        s"weighted_sample_agg expects a double weight, got ${weight.dataType.sql}")
-    else if (payload.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure(
-        s"weighted_sample_agg expects a string payload, got ${payload.dataType.sql}")
-    else if (!kExpr.foldable)
-      TypeCheckResult.TypeCheckFailure("k must be a constant")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def createAggregationBuffer(): WeightedSample =
-    WeightedSample.empty(k)
-
-  override def update(
-      buffer: WeightedSample, input: InternalRow): WeightedSample = {
-    val v = child.eval(input)
-    if (v != null) {
-      val wv = weight.eval(input)
-      if (wv != null) {
-        val w = wv.asInstanceOf[Double]
-        val h = v.asInstanceOf[Long]
-        // skip invalid weights (null semantics, not an error: a 100 TB
-        // scan survives a few bad quality scores observably); reject by
-        // (priority, hash) BEFORE materializing the payload — on a
-        // saturated sketch most rows never copy a byte (the
-        // KmvSampleAgg reject-before-copy rule)
-        if (WeightedSample.validWeight(w) && buffer.wouldAccept(h, w)) {
-          val p = payload.eval(input)
-          if (p != null) {
-            val u = p.asInstanceOf[UTF8String]
-            // truncate BEFORE the ownership copy (KmvSampleAgg rule)
-            val n = math.min(u.numBytes, KmvSample.MaxPayloadBytes)
-            val arr = new Array[Byte](n)
-            org.apache.spark.unsafe.Platform.copyMemory(
-              u.getBaseObject, u.getBaseOffset, arr,
-              org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, n.toLong)
-            buffer.add(h, w, arr)
-          }
-        }
-      }
-    }
-    buffer
-  }
-  override def merge(
-      buffer: WeightedSample, other: WeightedSample): WeightedSample =
-    buffer.mergeIn(other)
-  override def eval(buffer: WeightedSample): Any = buffer.toBytes
-  override def serialize(buffer: WeightedSample): Array[Byte] = buffer.toBytes
-  override def deserialize(bytes: Array[Byte]): WeightedSample =
-    WeightedSample.fromBytes(bytes)
-
-  override def withNewMutableAggBufferOffset(o: Int): WeightedSampleAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): WeightedSampleAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(
-      c: IndexedSeq[Expression]): WeightedSampleAgg =
-    copy(child = c(0), weight = c(1), payload = c(2), kExpr = c(3))
-  override def prettyName: String = "weighted_sample_agg"
-}
 
 /** `weighted_sample_entries(sketch) ->
   * array<struct<value:string, weight:double>>` — the retained sample

@@ -5,9 +5,9 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Cbf, Hll, Kll, MisraGries, Sbbf, Sbf, TDigest}
-import graft.expr.{BloomCodec, CbfCodec, CmsCodec, HllCodec, KllCodec, KmvCodec, KmvSampleCodec,
-  MgCodec, SbfCodec, SketchCodec, TDigestCodec, WeightedSampleCodec}
+import graft.core.{Hll, Kll, Kmv, TDigest, WeightedSample}
+import graft.expr.{BloomKernel, CbfKernel, CmsKernel, HllKernel, KllKernel, KmvKernel, KmvSampleKernel,
+  MgKernel, Params, SbfKernel, SketchCodec, SketchKernel, TDigestKernel, WeightedSampleKernel}
 import graft.functions._
 
 /** A per-partition sketch kernel for [[SketchBuild]]: how to project the
@@ -20,12 +20,12 @@ import graft.functions._
   * parallel") — not just the Bloom filter.
   */
 trait PartitionSketcher extends Serializable {
-  /** Single-column projection handed to [[update]]; null rows are skipped
-    * before update is called (matching the aggregate expressions' null
-    * semantics). */
-  def project(valueCol: Column): Column
+  /** The columns handed to [[update]], one per kernel input; rows with a
+    * null column are skipped before update is called (matching the
+    * aggregate expressions' null semantics). */
+  def project(valueCol: Column): Seq[Column]
   def newBuffer(): AnyRef
-  /** Fold the projected (non-null) value at ordinal 0 into the buffer. */
+  /** Fold the projected (non-null) columns into the buffer. */
   def update(buffer: AnyRef, row: InternalRow): Unit
   def toBytes(buffer: AnyRef): Array[Byte]
   /** The family's wire codec: parses, merges and canonicalizes the
@@ -43,175 +43,96 @@ trait PartitionSketcher extends Serializable {
   final def finalizeBytes(bytes: Array[Byte]): Array[Byte] = codec.finishBytes(bytes)
 }
 
+/** Each sketcher is a family's build kernel plus a projection of the value
+  * column onto the kernel's inputs. Hashed kernels share the upstream
+  * `abloom_key_hash` projection — one codegen'd hash per row, `getLong`
+  * in the loop. The wire is content-canonical for every family, so
+  * resume byte-identity holds for all of them.
+  */
 object PartitionSketcher {
 
-  /** Hashed-long kernels share the upstream `abloom_key_hash` projection —
-    * one codegen'd hash per row, `getLong` in the loop. */
-  private abstract class HashedKernel extends PartitionSketcher {
-    final def project(valueCol: Column): Column = abloom_key_hash(valueCol)
+  // `projection` builds plan fragments on the driver only: executors
+  // never call `project`, and a captured Column need not serialize
+  private final class Kernel[B <: AnyRef](
+      kernel: SketchKernel[B], params: Params, @transient projection: Column => Seq[Column])
+    extends PartitionSketcher {
+    def project(valueCol: Column): Seq[Column] = projection(valueCol)
+    def newBuffer(): AnyRef = kernel.newBuffer(params)
+    def update(b: AnyRef, row: InternalRow): Unit = kernel.updateProjected(b.asInstanceOf[B], row)
+    def toBytes(b: AnyRef): Array[Byte] = kernel.buffer.toBytes(b.asInstanceOf[B])
+    def codec: SketchCodec[_ <: AnyRef] = kernel.codec
   }
 
-  def bloom(capacity: Long, fpRate: Double): PartitionSketcher = new HashedKernel {
-    def newBuffer(): AnyRef = Sbbf.empty(capacity, fpRate)
-    def update(b: AnyRef, row: InternalRow): Unit =
-      b.asInstanceOf[Sbbf].insertHash(row.getLong(0))
-    def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[Sbbf].toBytes
-    def codec = BloomCodec
+  private def hashed(kernel: SketchKernel[_ <: AnyRef], params: Any*): PartitionSketcher =
+    new Kernel(kernel, Params(params: _*), c => Seq(abloom_key_hash(c)))
+
+  private def doubles(kernel: SketchKernel[_ <: AnyRef], params: Any*): PartitionSketcher =
+    new Kernel(kernel, Params(params: _*), c => Seq(c.cast(DoubleType)))
+
+  /** A bounded string PREVIEW of the value (null iff the value is). */
+  private def previewOf(previewChars: Int): Column => Column = {
+    require(previewChars >= 1, s"previewChars must be >= 1, got $previewChars")
+    c => substring(c.cast(StringType), 1, previewChars)
   }
 
-  def hll(p: Int = Hll.DefaultP): PartitionSketcher = new HashedKernel {
-    def newBuffer(): AnyRef = graft.core.HllBuffer.empty(p)
-    def update(b: AnyRef, row: InternalRow): Unit =
-      b.asInstanceOf[graft.core.HllBuffer].addHash(row.getLong(0))
-    def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[graft.core.HllBuffer].toBytes
-    def codec = HllCodec
-  }
+  def bloom(capacity: Long, fpRate: Double): PartitionSketcher = hashed(BloomKernel, capacity, fpRate)
 
-  def cms(eps: Double, delta: Double): PartitionSketcher = new HashedKernel {
-    def newBuffer(): AnyRef = graft.core.CountMinBuffer.forError(eps, delta)
-    def update(b: AnyRef, row: InternalRow): Unit =
-      b.asInstanceOf[graft.core.CountMinBuffer].addHash(row.getLong(0))
-    def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[graft.core.CountMinBuffer].toBytes
-    def codec = CmsCodec
-  }
+  def hll(p: Int = Hll.DefaultP): PartitionSketcher = hashed(HllKernel, p)
+
+  def cms(eps: Double, delta: Double): PartitionSketcher = hashed(CmsKernel, eps, delta)
 
   def tdigest(compression: Double = TDigest.DefaultCompression): PartitionSketcher =
-    new PartitionSketcher {
-      def project(valueCol: Column): Column = valueCol.cast(DoubleType)
-      def newBuffer(): AnyRef = TDigest.empty(compression)
-      def update(b: AnyRef, row: InternalRow): Unit =
-        b.asInstanceOf[TDigest].add(row.getDouble(0))
-      def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[TDigest].toBytes
-      def codec = TDigestCodec
-    }
+    doubles(TDigestKernel, compression)
 
-  def kll(k: Int = Kll.DefaultK): PartitionSketcher = new PartitionSketcher {
-    def project(valueCol: Column): Column = valueCol.cast(DoubleType)
-    def newBuffer(): AnyRef = Kll.empty(k)
-    def update(b: AnyRef, row: InternalRow): Unit =
-      b.asInstanceOf[Kll].add(row.getDouble(0))
-    def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[Kll].toBytes
-    def codec = KllCodec
-  }
+  def kll(k: Int = Kll.DefaultK): PartitionSketcher = doubles(KllKernel, k)
 
   /** Insert-only counting-filter build (deletes happen at query time via
     * `cbf_agg` with weights; a resumable BUILD is inserts). */
-  def cbf(capacity: Long, fpRate: Double): PartitionSketcher = new HashedKernel {
-    def newBuffer(): AnyRef = Cbf.empty(capacity, fpRate)
-    def update(b: AnyRef, row: InternalRow): Unit =
-      b.asInstanceOf[Cbf].insertHash(row.getLong(0))
-    def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[Cbf].toBytes
-    def codec = CbfCodec
-  }
+  def cbf(capacity: Long, fpRate: Double): PartitionSketcher =
+    new Kernel(CbfKernel, Params(capacity, fpRate), c => Seq(abloom_key_hash(c), lit(1)))
 
   /** Scalable-filter build: partials grow stages independently; the
     * union aggregate's eval compacts to the canonical ABSF form, so the
     * canonical-merge-order guarantee carries the byte-determinism. */
-  def sbf(initialCapacity: Long, fp0: Double): PartitionSketcher = new HashedKernel {
-    def newBuffer(): AnyRef = Sbf.empty(initialCapacity, fp0)
-    def update(b: AnyRef, row: InternalRow): Unit =
-      b.asInstanceOf[Sbf].addHash(row.getLong(0))
-    def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[Sbf].toBytes
-    def codec = SbfCodec
-  }
+  def sbf(initialCapacity: Long, fp0: Double): PartitionSketcher =
+    hashed(SbfKernel, initialCapacity, fp0)
 
   /** Distinct-sample-with-payload build: like [[kmv]] but each retained
-    * key hash carries a bounded string PREVIEW of the value. The
-    * projection is a (hash, preview) struct, null'd when the value is
-    * null so the build's null-skip applies; the wire is content-
-    * canonical (deterministic payload tie rule), so resume byte-identity
-    * holds like every other family.
-    */
-  def kmvSample(
-      k: Int = graft.core.Kmv.DefaultK,
-      previewChars: Int = 256): PartitionSketcher = {
-    require(previewChars >= 1,
-      s"previewChars must be >= 1, got $previewChars")
-    new PartitionSketcher {
-    def project(valueCol: Column): Column =
-      when(valueCol.isNull, lit(null))
-        .otherwise(struct(
-          abloom_key_hash(valueCol).as("h"),
-          substring(valueCol.cast(StringType), 1, previewChars).as("p")))
-    def newBuffer(): AnyRef = graft.core.KmvSample.empty(k)
-    def update(b: AnyRef, row: InternalRow): Unit = {
-      val s = row.getStruct(0, 2)
-      // copy() for ownership: the UTF8String can alias a reused buffer
-      b.asInstanceOf[graft.core.KmvSample]
-        .add(s.getLong(0), s.getUTF8String(1).copy().getBytes)
-    }
-    def toBytes(b: AnyRef): Array[Byte] =
-      b.asInstanceOf[graft.core.KmvSample].toBytes
-    def codec = KmvSampleCodec
-    }
+    * key hash carries a bounded string PREVIEW of the value (deterministic
+    * payload tie rule). */
+  def kmvSample(k: Int = Kmv.DefaultK, previewChars: Int = 256): PartitionSketcher = {
+    val preview = previewOf(previewChars)
+    new Kernel(KmvSampleKernel, Params(k), c => Seq(abloom_key_hash(c), preview(c)))
   }
 
   /** WEIGHTED distinct-sample build ([[graft.core.WeightedSample]],
     * A-RES): like [[kmvSample]] but retention is by priority
-    * u(hash)^(1/weight). `weight` is a DRIVER-SIDE plan fragment
-    * (@transient — `project` runs on the driver only; executors never
-    * touch the field). Rows with a null value or an invalid weight
+    * u(hash)^(1/weight). Rows with a null value or an invalid weight
     * (null, NaN, infinite, or below [[graft.core.WeightedSample.MinWeight]])
-    * are nulled in the projection,
-    * matching the aggregate expression's skip semantics; the wire is
-    * content-canonical, so resume byte-identity holds like every other
-    * family.
+    * are skipped, and excluded from the lineage row counts, matching the
+    * aggregate expression's skip semantics.
     */
   def weightedSample(
       weight: Column,
-      k: Int = graft.core.Kmv.DefaultK,
+      k: Int = Kmv.DefaultK,
       previewChars: Int = 256): PartitionSketcher = {
-    require(previewChars >= 1,
-      s"previewChars must be >= 1, got $previewChars")
-    new WeightedSampleKernel(weight, k, previewChars)
-  }
-
-  private final class WeightedSampleKernel(
-      @transient private val weight: Column,
-      k: Int,
-      previewChars: Int) extends PartitionSketcher {
-    def project(valueCol: Column): Column = {
+    val preview = previewOf(previewChars)
+    new Kernel(WeightedSampleKernel, Params(k), { c =>
       val w = weight.cast(DoubleType)
       // isnan is explicit: Spark's NaN ordering makes NaN < x FALSE, so
       // the range test alone would admit NaN
-      when(valueCol.isNull || w.isNull || isnan(w) ||
-          w < lit(graft.core.WeightedSample.MinWeight) ||
-          w === lit(Double.PositiveInfinity), lit(null))
-        .otherwise(struct(
-          abloom_key_hash(valueCol).as("h"),
-          w.as("w"),
-          substring(valueCol.cast(StringType), 1, previewChars).as("p")))
-    }
-    def newBuffer(): AnyRef = graft.core.WeightedSample.empty(k)
-    def update(b: AnyRef, row: InternalRow): Unit = {
-      val s = row.getStruct(0, 3)
-      // copy() for ownership: the UTF8String can alias a reused buffer
-      b.asInstanceOf[graft.core.WeightedSample]
-        .add(s.getLong(0), s.getDouble(1), s.getUTF8String(2).copy().getBytes)
-    }
-    def toBytes(b: AnyRef): Array[Byte] =
-      b.asInstanceOf[graft.core.WeightedSample].toBytes
-    def codec = WeightedSampleCodec
+      val valid = when(isnan(w) || w < lit(WeightedSample.MinWeight) ||
+        w === lit(Double.PositiveInfinity), lit(null)).otherwise(w)
+      Seq(abloom_key_hash(c), valid, preview(c))
+    })
   }
 
   /** Bottom-k/theta build: the state is a canonical set, so tree and
     * flat merges are byte-equal like the cell-wise families. */
-  def kmv(k: Int = graft.core.Kmv.DefaultK): PartitionSketcher = new HashedKernel {
-    def newBuffer(): AnyRef = graft.core.Kmv.empty(k)
-    def update(b: AnyRef, row: InternalRow): Unit =
-      b.asInstanceOf[graft.core.Kmv].add(row.getLong(0))
-    def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[graft.core.Kmv].toBytes
-    def codec = KmvCodec
-  }
+  def kmv(k: Int = Kmv.DefaultK): PartitionSketcher = hashed(KmvKernel, k)
 
-  def misraGries(k: Int): PartitionSketcher = new PartitionSketcher {
-    def project(valueCol: Column): Column = valueCol.cast(StringType)
-    def newBuffer(): AnyRef = MisraGries.empty(k)
-    def update(b: AnyRef, row: InternalRow): Unit =
-      b.asInstanceOf[MisraGries].add(row.getUTF8String(0)) // no String alloc
-    def toBytes(b: AnyRef): Array[Byte] = b.asInstanceOf[MisraGries].toBytes
-    def codec = MgCodec
-  }
+  def misraGries(k: Int): PartitionSketcher =
+    new Kernel(MgKernel, Params(k), c => Seq(c.cast(StringType)))
 }
 
 /** Checkpointed, resumable sketch build with per-partition lineage +
@@ -259,7 +180,8 @@ object SketchBuild {
     // executed plan (AQE may size the projected plan differently than
     // df.rdd's), and (b) Spark reuses the upstream shuffle map output
     // across batches instead of re-running it per batch.
-    val projected = df.select(sketcher.project(valueCol).as("v"))
+    val cols = sketcher.project(valueCol)
+    val projected = df.select(cols.zipWithIndex.map { case (c, i) => c.as(s"v$i") }: _*)
       .queryExecution.toRdd
     val nParts = projected.getNumPartitions
     checkLayout(spark, checkpointDir, nParts)
@@ -271,7 +193,7 @@ object SketchBuild {
     val todo = (0 until nParts).filterNot(done)
 
     todo.grouped(batchSize).foreach { batch =>
-      val rows = buildPartitions(spark, projected, sketcher, batch)
+      val rows = buildPartitions(spark, projected, cols.size, sketcher, batch)
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), checkpointSchema)
         .write.mode(SaveMode.Append).parquet(checkpointDir)
@@ -350,6 +272,7 @@ object SketchBuild {
   private def buildPartitions(
       spark: SparkSession,
       projected: org.apache.spark.rdd.RDD[InternalRow],
+      width: Int,
       sketcher: PartitionSketcher,
       partitionIds: Seq[Int]): Seq[Row] = {
     val results = spark.sparkContext.runJob(
@@ -360,7 +283,9 @@ object SketchBuild {
         var n = 0L
         while (it.hasNext) {
           val row = it.next()
-          if (!row.isNullAt(0)) { sketcher.update(buf, row); n += 1 }
+          var i = 0
+          while (i < width && !row.isNullAt(i)) i += 1
+          if (i == width) { sketcher.update(buf, row); n += 1 }
         }
         val ms = (System.nanoTime() - t0) / 1000000L
         (ctx.partitionId(), sketcher.toBytes(buf), n, ms)

@@ -432,7 +432,8 @@ object Similarity {
       .select(col("v")).collect()
       .map(_.getSeq[Double](0).toArray)
 
-    for (_ <- 1 to iters) {
+    // an empty table trains the empty quantizer: no lists, no matches
+    if (centroids.nonEmpty) for (_ <- 1 to iters) {
       // element-wise mean per cluster via posexplode + groupBy — shuffles
       // only (cluster, dim, partial sums), never whole vectors
       val newCents = base
@@ -490,7 +491,16 @@ object Similarity {
     df.select(
       col(idCol).cast("long").as("id"),
       col(vecCol),
-      graft.functions.vec_nearest_centroid(col(vecCol), centroids).as("list"))
+      nearestList(col(vecCol), centroids).as("list"))
+
+  // the empty quantizer (k-means over an empty table) has no lists: an
+  // empty table has no rows to assign, and a query probes no list
+  private def nearestList(vec: Column, centroids: Array[Array[Double]]): Column =
+    if (centroids.isEmpty) lit(null).cast("int")
+    else graft.functions.vec_nearest_centroid(vec, centroids)
+  private def probeListsOf(vec: Column, centroids: Array[Array[Double]], nprobe: Int): Column =
+    if (centroids.isEmpty) typedLit(Seq.empty[Int])
+    else graft.functions.vec_probe_lists(vec, centroids, nprobe)
 
   /** Persist a complete IVF index: the inverted-list table range-
     * partitioned and sorted by `list` under `path/lists` (row-group
@@ -641,8 +651,7 @@ object Similarity {
     val probes = queries.select(
       col(queryIdCol).cast("long").as("query_id"),
       graft.functions.vec8_quantize(col(queryVecCol)).as("qb"),
-      explode(graft.functions.vec_probe_lists(
-        col(queryVecCol), centroids, nprobe)).as("list"))
+      explode(probeListsOf(col(queryVecCol), centroids, nprobe)).as("list"))
     val scored = index.join(broadcast(probes), "list")
       .select(col("query_id"), col("id").as("neighbor_id"),
         ((graft.functions.vec8_scale(col("qb")) *

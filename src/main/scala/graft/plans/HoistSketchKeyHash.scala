@@ -4,10 +4,11 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-import graft.expr._
+import graft.expr.{AbloomKeyHash, SketchBuildAgg}
 
-/** Hoists `abloom_key_hash` out of sketch aggregate functions into a
-  * codegen'd projection below the Aggregate.
+/** Hoists `abloom_key_hash` out of the build aggregates (any
+  * [[graft.expr.SketchBuildAgg]] child that is an [[AbloomKeyHash]]) into
+  * a codegen'd projection below the Aggregate.
   *
   * `TypedImperativeAggregate.update` evaluates its children INTERPRETED,
   * once per row — `bloom_agg(key)` pays an interpreted XXH64 (plus
@@ -31,12 +32,6 @@ import graft.expr._
   */
 object HoistSketchKeyHash extends Rule[LogicalPlan] {
 
-  private def isSketchAgg(f: Expression): Boolean = f match {
-    case _: BloomFilterAgg | _: CbfAgg | _: SbfAgg | _: HllAgg | _: CmsAgg |
-         _: KmvAgg | _: KmvSampleAgg | _: WeightedSampleAgg => true
-    case _ => false
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case agg @ Aggregate(_, aggExprs, child, _) if agg.resolved =>
       val hoisted = scala.collection.mutable.ArrayBuffer.empty[(AbloomKeyHash, Alias)]
@@ -48,7 +43,7 @@ object HoistSketchKeyHash extends Rule[LogicalPlan] {
         }
       val newAggExprs = aggExprs.map { ne =>
         ne.transformUp {
-          case f if isSketchAgg(f) =>
+          case f: SketchBuildAgg[_] =>
             f.mapChildren {
               case k: AbloomKeyHash
                   if k.deterministic && k.references.subsetOf(child.outputSet) =>

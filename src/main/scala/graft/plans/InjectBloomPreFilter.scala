@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
-import graft.expr.{AbloomKeyHash, BloomFilterAgg, SketchOp, SketchQuery}
+import graft.expr.{AbloomKeyHash, BloomKernel, SketchOp, SketchQuery}
 
 /** Automatic ABLM bloom pre-filter injection for equi-joins — the
   * optimizer-rule counterpart of the manual `bloom_contains` pattern in
@@ -139,7 +139,7 @@ object InjectBloomPreFilter extends Rule[LogicalPlan] with PredicateHelper {
   private def inject(app: LogicalPlan, creation: LogicalPlan,
       appKey: Expression, cKey: Expression): LogicalPlan = {
     val pruned = Project(cKey.references.toSeq, creation)
-    val agg = BloomFilterAgg(AbloomKeyHash(cKey), Literal(capacity), Literal(fpRate))
+    val agg = BloomKernel(Seq(AbloomKeyHash(cKey)), Seq(Literal(capacity), Literal(fpRate)))
       .toAggregateExpression()
     val build = Aggregate(Nil, Seq(Alias(agg, "graftBloomFilter")()), pruned)
     Filter(SketchQuery(ScalarSubquery(build), AbloomKeyHash(appKey), SketchOp.BloomContains), app)

@@ -12,6 +12,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.BinaryType
 
+import graft.expr.{SketchBuildAgg, SketchUnionAgg, TopKAgg}
+
 /** Purpose-built physical aggregation for graft sketch aggregates.
   *
   * Spark plans `TypedImperativeAggregate`s as `ObjectHashAggregateExec`,
@@ -534,9 +536,10 @@ case class SketchFinalAggExec(
 case class SketchAggStrategy(session: SparkSession) extends SparkStrategy {
 
   private def isGraftSketchAgg(ae: AggregateExpression): Boolean =
-    ae.mode == Complete && !ae.isDistinct && ae.filter.isEmpty &&
-      ae.aggregateFunction.isInstanceOf[TypedImperativeAggregate[_]] &&
-      ae.aggregateFunction.getClass.getName.startsWith("graft.expr.")
+    ae.mode == Complete && !ae.isDistinct && ae.filter.isEmpty && (ae.aggregateFunction match {
+      case _: SketchBuildAgg[_] | _: SketchUnionAgg[_] | _: TopKAgg => true
+      case _ => false
+    })
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case PhysicalAggregation(grouping, aggs, results, child)

@@ -3,7 +3,7 @@ package graft.sql
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.expr._
@@ -20,21 +20,16 @@ object Registry {
 
   /** (name, builder) for every SQL-exposed function. Aggregates are
     * returned unwrapped — the analyzer wraps AggregateFunction in
-    * AggregateExpression during resolution. The `*_union_agg` entries
-    * come from [[SketchCodec.all]], one per family codec, and the sketch
-    * queries from [[SketchOp.all]]: a key query hashes its key, the others
-    * cast their argument to double.
+    * AggregateExpression during resolution. The build aggregates come
+    * from [[SketchKernel.all]], their arity checked against the kernel's
+    * signature; the `*_union_agg` entries from [[SketchCodec.all]], one
+    * per family codec; and the sketch queries from [[SketchOp.all]]: a
+    * key query hashes its key, the others cast their argument to double.
     */
   type Builder = Seq[Expression] => Expression
 
   val functions: Seq[(String, Builder)] = Seq[(String, Builder)](
     "abloom_key_hash" -> { args => AbloomKeyHash(args.head) },
-    "bloom_agg" -> { args =>
-      require(args.size == 2 || args.size == 3, "bloom_agg(key, capacity[, fp_rate])")
-      val fp = if (args.size == 3) args(2)
-        else org.apache.spark.sql.catalyst.expressions.Literal(0.01) // reference default
-      BloomFilterAgg(AbloomKeyHash(args(0)), args(1), fp)
-    },
     "bloom_union" -> { args =>
       require(args.size == 2, "bloom_union(a, b)")
       BloomUnion(args(0), args(1))
@@ -46,60 +41,11 @@ object Registry {
       require(args.size == 2, "bloom_intersect_estimate(a, b)")
       BloomIntersectEstimate(args(0), args(1))
     },
-    // cbf_agg(key, capacity[, fp_rate]) = insert-only, MATCHING the Scala
-    // API's argument order; the weighted form has its own name so the SQL
-    // 3-arg call can never silently bind capacity as a per-row weight.
-    "cbf_agg" -> { args =>
-      require(args.size == 2 || args.size == 3, "cbf_agg(key, capacity[, fp_rate])")
-      val fp = if (args.size == 3) args(2)
-        else org.apache.spark.sql.catalyst.expressions.Literal(0.01)
-      CbfAgg(AbloomKeyHash(args(0)),
-        org.apache.spark.sql.catalyst.expressions.Literal(1), args(1), fp)
-    },
-    "cbf_agg_weighted" -> { args =>
-      require(args.size == 3 || args.size == 4,
-        "cbf_agg_weighted(key, weight, capacity[, fp_rate])")
-      val fp = if (args.size == 4) args(3)
-        else org.apache.spark.sql.catalyst.expressions.Literal(0.01)
-      CbfAgg(AbloomKeyHash(args(0)),
-        Cast(args(1), org.apache.spark.sql.types.IntegerType), args(2), fp)
-    },
-    "sbf_agg" -> { args =>
-      require(args.size == 1 || args.size == 3, "sbf_agg(key[, initial_capacity, fp_rate])")
-      val cap = if (args.size == 3) args(1)
-        else org.apache.spark.sql.catalyst.expressions.Literal(4096L)
-      val fp = if (args.size == 3) args(2)
-        else org.apache.spark.sql.catalyst.expressions.Literal(0.001)
-      SbfAgg(AbloomKeyHash(args(0)), cap, fp)
-    },
     "sbf_describe" -> { args => SbfDescribe(args.head) },
-    "hll_agg" -> { args =>
-      val p = if (args.size > 1) args(1)
-        else org.apache.spark.sql.catalyst.expressions.Literal(graft.core.Hll.DefaultP)
-      HllAgg(AbloomKeyHash(args(0)), p)
-    },
-    "kmv_agg" -> { args =>
-      val k = if (args.size > 1) args(1)
-        else org.apache.spark.sql.catalyst.expressions.Literal(graft.core.Kmv.DefaultK)
-      KmvAgg(AbloomKeyHash(args(0)), k)
-    },
     "kmv_estimate" -> { args => KmvEstimate(args.head) },
-    "kmv_sample_agg" -> { args =>
-      require(args.size >= 2, "kmv_sample_agg(key, payload[, k])")
-      val k = if (args.size > 2) args(2)
-        else org.apache.spark.sql.catalyst.expressions.Literal(graft.core.Kmv.DefaultK)
-      KmvSampleAgg(AbloomKeyHash(args(0)), args(1), k)
-    },
     "kmv_sample_estimate" -> { args => KmvSampleEstimate(args.head) },
     "kmv_sample_values" -> { args => KmvSampleValues(args.head) },
     "kmv_sample_describe" -> { args => KmvSampleDescribe(args.head) },
-    "weighted_sample_agg" -> { args =>
-      require(args.size >= 3, "weighted_sample_agg(key, weight, payload[, k])")
-      val k = if (args.size > 3) args(3)
-        else org.apache.spark.sql.catalyst.expressions.Literal(graft.core.Kmv.DefaultK)
-      WeightedSampleAgg(AbloomKeyHash(args(0)),
-        Cast(args(1), org.apache.spark.sql.types.DoubleType), args(2), k)
-    },
     "weighted_sample_entries" -> { args => WeightedSampleEntries(args.head) },
     "weighted_sample_describe" -> { args => WeightedSampleDescribe(args.head) },
     "kmv_intersect_estimate" -> { args =>
@@ -112,27 +58,9 @@ object Registry {
       require(args.size == 2, "hll_intersect_estimate(a, b)")
       HllIntersectEstimate(args(0), args(1))
     },
-    "cms_agg" -> { args =>
-      require(args.size == 3, "cms_agg(key, eps, delta)")
-      CmsAgg(AbloomKeyHash(args(0)), args(1), args(2))
-    },
     "cms_inner_product" -> { args =>
       require(args.size == 2, "cms_inner_product(a, b)")
       CmsInnerProduct(args(0), args(1))
-    },
-    "tdigest_agg" -> { args =>
-      val c = if (args.size > 1) args(1)
-        else org.apache.spark.sql.catalyst.expressions.Literal(graft.core.TDigest.DefaultCompression)
-      TDigestAgg(Cast(args(0), DoubleType), c)
-    },
-    "kll_agg" -> { args =>
-      val k = if (args.size > 1) args(1)
-        else org.apache.spark.sql.catalyst.expressions.Literal(graft.core.Kll.DefaultK)
-      KllAgg(Cast(args(0), DoubleType), k)
-    },
-    "mg_agg" -> { args =>
-      require(args.size == 2, "mg_agg(key, k)")
-      MgAgg(args(0), args(1))
     },
     "mg_topk" -> { args =>
       require(args.size == 2, "mg_topk(sketch, m)")
@@ -236,7 +164,14 @@ object Registry {
       TopKAgg(Cast(args(0), DoubleType), Cast(args(1), LongType),
         args(2), foldableInt(args(3), "k"))
         .toAggregateExpression()
-    }) ++ SketchCodec.all.map { codec =>
+    }) ++ SketchKernel.all.map { kernel =>
+      // cbf_agg(key, capacity[, fp_rate]) is insert-only, MATCHING the
+      // Scala API's argument order; the weighted form has its own name so
+      // a 3-arg SQL call can never silently bind capacity as a weight
+      val name = if (kernel eq CbfKernel) "cbf_agg_weighted" else kernel.name
+      name -> kernel.sqlBuilder(name)
+    } ++ Seq("cbf_agg" -> CbfKernel.sqlBuilder("cbf_agg", "weight" -> Literal(1))) ++
+    SketchCodec.all.map { codec =>
       s"${codec.family}_union_agg" -> { (args: Seq[Expression]) => SketchUnionAgg(args.head, codec) }
     } ++ SketchOp.all.map { op =>
       op.name -> { (args: Seq[Expression]) =>

@@ -2,12 +2,15 @@ package graft.typed
 
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.{Hashing, Hll, Kll, MisraGries, Sbbf, TDigest}
+import graft.core.{Hashing, Hll, HllBuffer, Kll, MisraGries, Sbbf, TDigest}
+import graft.expr.{BloomKernel, HllKernel, KllKernel, MgKernel, Params, SketchKernel, TDigestKernel}
 
 /** Typed `Dataset[T]` surface: `org.apache.spark.sql.expressions.Aggregator`
-  * facades over the same sketch kernels the Catalyst expressions use
-  * (north rule: "mergeable Aggregator/UDAF ... over typed Datasets").
+  * facades over the same build kernels the Catalyst aggregates use
+  * (north rule: "mergeable Aggregator/UDAF ... over typed Datasets"), so
+  * a facade's bytes equal the expression build's over the same keys.
   *
   * Use when the input is a typed Dataset and the key is a field access —
   * the aggregator composes with `groupByKey(...).agg(...)` and keeps the
@@ -21,134 +24,102 @@ import graft.core.{Hashing, Hll, Kll, MisraGries, Sbbf, TDigest}
   * The untyped column API ([[graft.functions]]) stays the faster path for
   * wide scans (codegen'd key hash, no object deserialization); these
   * aggregators pay the Dataset object codec, which is the normal typed
-  * trade in Spark.
+  * trade in Spark. Null keys are SKIPPED, as in the expression aggregates.
   */
 object TypedSketches {
 
-  private def kryo[A](implicit ct: scala.reflect.ClassTag[A]): Encoder[A] =
-    Encoders.kryo[A]
-
-  /** Bloom filter over a string key of `IN`; output = ABLM v2 bytes,
-    * bit-identical to the expression build over the same keys. Null keys
-    * are SKIPPED, matching the expression aggregates' null handling
-    * (`bloom_agg`/`hll_agg` never insert a null).
-    */
-  def bloomOfString[IN](key: IN => String, capacity: Long, fpRate: Double): Aggregator[IN, Sbbf, Array[Byte]] =
-    new BloomAggregator[IN](in => {
+  /** Bloom filter over a string key of `IN`; output = ABLM v2 bytes. */
+  def bloomOfString[IN](key: IN => String, capacity: Long, fpRate: Double)
+      : Aggregator[IN, SketchBuffer, Array[Byte]] =
+    new KernelAggregator[IN, Sbbf](BloomKernel, capacity, fpRate)((b, in) => {
       val k = key(in)
-      if (k == null) null else java.lang.Long.valueOf(Hashing.hashString(k))
-    }, capacity, fpRate)
+      if (k != null) BloomKernel.update(b, Hashing.hashString(k))
+    })
 
   /** Bloom filter over an integral key of `IN`. */
-  def bloomOfLong[IN](key: IN => Long, capacity: Long, fpRate: Double): Aggregator[IN, Sbbf, Array[Byte]] =
-    new BloomAggregator[IN](in => java.lang.Long.valueOf(Hashing.hashLong(key(in))), capacity, fpRate)
+  def bloomOfLong[IN](key: IN => Long, capacity: Long, fpRate: Double)
+      : Aggregator[IN, SketchBuffer, Array[Byte]] =
+    new KernelAggregator[IN, Sbbf](BloomKernel, capacity, fpRate)(
+      (b, in) => BloomKernel.update(b, Hashing.hashLong(key(in))))
 
-  /** HLL distinct-count sketch over a string key of `IN`; null keys skipped. */
-  def hllOfString[IN](key: IN => String, p: Int = Hll.DefaultP): Aggregator[IN, Hll, Array[Byte]] =
-    new HllAggregator[IN](in => {
+  /** HLL distinct-count sketch over a string key of `IN`. */
+  def hllOfString[IN](key: IN => String, p: Int = Hll.DefaultP)
+      : Aggregator[IN, SketchBuffer, Array[Byte]] =
+    new KernelAggregator[IN, HllBuffer](HllKernel, p)((b, in) => {
       val k = key(in)
-      if (k == null) null else java.lang.Long.valueOf(Hashing.hashString(k))
-    }, p)
-
-  /** Aggregation buffer that serializes a t-digest through its WIRE
-    * format instead of raw fields: the digest's pending-point buffers
-    * are `@transient` (a deliberate choice — `toBytes` compresses them
-    * first), so a field-level kryo/Java round-trip mid-aggregation
-    * would silently DROP up to `4*compression` buffered points per
-    * ser/de. Caught by the typed-facade spec: count came back 1600 of
-    * 3000.
-    */
-  final class TDigestBuffer(@transient var td: TDigest)
-    extends com.esotericsoftware.kryo.KryoSerializable with Serializable {
-    override def write(kryo: com.esotericsoftware.kryo.Kryo,
-        out: com.esotericsoftware.kryo.io.Output): Unit = {
-      val b = td.toBytes
-      out.writeInt(b.length); out.writeBytes(b)
-    }
-    override def read(kryo: com.esotericsoftware.kryo.Kryo,
-        in: com.esotericsoftware.kryo.io.Input): Unit =
-      td = TDigest.fromBytes(in.readBytes(in.readInt()))
-    private def writeObject(o: java.io.ObjectOutputStream): Unit = {
-      val b = td.toBytes
-      o.writeInt(b.length); o.write(b)
-    }
-    private def readObject(i: java.io.ObjectInputStream): Unit = {
-      val b = new Array[Byte](i.readInt()); i.readFully(b)
-      td = TDigest.fromBytes(b)
-    }
-  }
+      if (k != null) HllKernel.update(b, Hashing.hashString(k))
+    })
 
   /** t-digest quantile sketch over a numeric value of `IN`. */
-  def tdigestOf[IN](value: IN => Double,
-      compression: Double = TDigest.DefaultCompression): Aggregator[IN, TDigestBuffer, Array[Byte]] =
-    new Aggregator[IN, TDigestBuffer, Array[Byte]] {
-      override def zero: TDigestBuffer = new TDigestBuffer(TDigest.empty(compression))
-      override def reduce(b: TDigestBuffer, a: IN): TDigestBuffer = {
-        b.td.add(value(a)); b
-      }
-      override def merge(a: TDigestBuffer, b: TDigestBuffer): TDigestBuffer = {
-        a.td.merge(b.td); a
-      }
-      override def finish(b: TDigestBuffer): Array[Byte] = b.td.toBytes
-      override def bufferEncoder: Encoder[TDigestBuffer] = kryo[TDigestBuffer]
-      override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    }
+  def tdigestOf[IN](value: IN => Double, compression: Double = TDigest.DefaultCompression)
+      : Aggregator[IN, SketchBuffer, Array[Byte]] =
+    new KernelAggregator[IN, TDigest](TDigestKernel, compression)(
+      (b, in) => TDigestKernel.update(b, value(in)))
 
   /** KLL quantile sketch over a numeric value of `IN`. */
-  def kllOf[IN](value: IN => Double, k: Int = Kll.DefaultK): Aggregator[IN, Kll, Array[Byte]] =
-    new Aggregator[IN, Kll, Array[Byte]] {
-      override def zero: Kll = Kll.empty(k)
-      override def reduce(b: Kll, a: IN): Kll = { b.add(value(a)); b }
-      override def merge(a: Kll, b: Kll): Kll = a.merge(b)
-      override def finish(b: Kll): Array[Byte] = b.toBytes
-      override def bufferEncoder: Encoder[Kll] = kryo[Kll]
-      override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    }
+  def kllOf[IN](value: IN => Double, k: Int = Kll.DefaultK): Aggregator[IN, SketchBuffer, Array[Byte]] =
+    new KernelAggregator[IN, Kll](KllKernel, k)((b, in) => KllKernel.update(b, value(in)))
 
-  /** Misra-Gries heavy-hitter summary over a string key of `IN`; null
-    * keys skipped (expression-aggregate semantics). */
-  def misraGriesOf[IN](key: IN => String, k: Int): Aggregator[IN, MisraGries, Array[Byte]] =
-    new Aggregator[IN, MisraGries, Array[Byte]] {
-      override def zero: MisraGries = MisraGries.empty(k)
-      override def reduce(b: MisraGries, a: IN): MisraGries = {
-        val s = key(a)
-        if (s != null) b.add(s)
-        b
-      }
-      override def merge(a: MisraGries, b: MisraGries): MisraGries = a.merge(b)
-      override def finish(b: MisraGries): Array[Byte] = b.toBytes
-      override def bufferEncoder: Encoder[MisraGries] = kryo[MisraGries]
-      override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    }
+  /** Misra-Gries heavy-hitter summary over a string key of `IN`. */
+  def misraGriesOf[IN](key: IN => String, k: Int): Aggregator[IN, SketchBuffer, Array[Byte]] =
+    new KernelAggregator[IN, MisraGries](MgKernel, k)((b, in) => {
+      val s = key(in)
+      if (s != null) MgKernel.update(b, UTF8String.fromString(s))
+    })
 
-  // hashOf returns a boxed hash, null meaning "null key — skip the row"
-  // (the same semantics as the Catalyst aggregates' update path)
-  private final class BloomAggregator[IN](
-      hashOf: IN => java.lang.Long, capacity: Long, fpRate: Double)
-    extends Aggregator[IN, Sbbf, Array[Byte]] {
-    override def zero: Sbbf = Sbbf.empty(capacity, fpRate)
-    override def reduce(b: Sbbf, a: IN): Sbbf = {
-      val h = hashOf(a)
-      if (h != null) b.insertHash(h.longValue())
+  private final class KernelAggregator[IN, B <: AnyRef](kernel: SketchKernel[B], params: Any*)(
+      add: (B, IN) => Unit) extends Aggregator[IN, SketchBuffer, Array[Byte]] {
+    private val p = Params(params: _*)
+    override def zero: SketchBuffer = new SketchBuffer(kernel, kernel.newBuffer(p))
+    override def reduce(b: SketchBuffer, a: IN): SketchBuffer = {
+      add(b.sketch.asInstanceOf[B], a)
       b
     }
-    override def merge(a: Sbbf, b: Sbbf): Sbbf = a.orInPlace(b)
-    override def finish(b: Sbbf): Array[Byte] = b.toBytes
-    override def bufferEncoder: Encoder[Sbbf] = kryo[Sbbf]
+    override def merge(a: SketchBuffer, b: SketchBuffer): SketchBuffer = {
+      a.sketch = kernel.buffer.merge(a.sketch.asInstanceOf[B], b.sketch.asInstanceOf[B])
+      a
+    }
+    override def finish(b: SketchBuffer): Array[Byte] =
+      kernel.buffer.resultBytes(b.sketch.asInstanceOf[B])
+    override def bufferEncoder: Encoder[SketchBuffer] = Encoders.kryo[SketchBuffer]
     override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
+}
 
-  private final class HllAggregator[IN](hashOf: IN => java.lang.Long, p: Int)
-    extends Aggregator[IN, Hll, Array[Byte]] {
-    override def zero: Hll = Hll.empty(p)
-    override def reduce(b: Hll, a: IN): Hll = {
-      val h = hashOf(a)
-      if (h != null) b.addHash(h.longValue())
-      b
-    }
-    override def merge(a: Hll, b: Hll): Hll = a.merge(b)
-    override def finish(b: Hll): Array[Byte] = b.toBytes
-    override def bufferEncoder: Encoder[Hll] = kryo[Hll]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+/** The typed facades' aggregation buffer: one kernel's buffer, serialized
+  * (kryo or Java) as the kernel's name and its buffer WIRE bytes, never
+  * field by field. A field-level round trip silently drops state the wire
+  * carries: the t-digest's pending points are `@transient` (3000 points
+  * came back as 1600).
+  */
+final class SketchBuffer(
+    @transient private[typed] var kernel: SketchKernel[_ <: AnyRef],
+    @transient private[typed] var sketch: AnyRef)
+  extends com.esotericsoftware.kryo.KryoSerializable with Serializable {
+
+  private def bytes: Array[Byte] = kernel.asInstanceOf[SketchKernel[AnyRef]].buffer.toBytes(sketch)
+  private def restore(name: String, b: Array[Byte]): Unit = {
+    kernel = SketchKernel.named(name)
+    sketch = kernel.buffer.fromBytes(b)
+  }
+
+  override def write(kryo: com.esotericsoftware.kryo.Kryo,
+      out: com.esotericsoftware.kryo.io.Output): Unit = {
+    val b = bytes
+    out.writeString(kernel.name); out.writeInt(b.length); out.writeBytes(b)
+  }
+  override def read(kryo: com.esotericsoftware.kryo.Kryo,
+      in: com.esotericsoftware.kryo.io.Input): Unit = {
+    val name = in.readString()
+    restore(name, in.readBytes(in.readInt()))
+  }
+  private def writeObject(o: java.io.ObjectOutputStream): Unit = {
+    val b = bytes
+    o.writeUTF(kernel.name); o.writeInt(b.length); o.write(b)
+  }
+  private def readObject(i: java.io.ObjectInputStream): Unit = {
+    val name = i.readUTF()
+    val b = new Array[Byte](i.readInt()); i.readFully(b)
+    restore(name, b)
   }
 }

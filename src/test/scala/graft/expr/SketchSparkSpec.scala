@@ -422,8 +422,8 @@ class SketchSparkSpec extends SparkTestBase {
     val hoisted = agg.queryExecution.optimizedPlan.collect {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
         a.aggregateExpressions.exists(_.exists {
-          case ks: KmvSampleAgg =>
-            ks.child.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Attribute]
+          case ks: SketchBuildAgg[_] if ks.kernel eq KmvSampleKernel =>
+            ks.children.head.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Attribute]
           case _ => false
         })
     }

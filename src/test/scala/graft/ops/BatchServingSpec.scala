@@ -311,4 +311,21 @@ class BatchServingSpec extends AnyFunSuite with SparkTestBase {
       }
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
+
+  test("k-means on an empty table gives an empty IVF index that serves no matches") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty-sf").toString
+    try {
+      Seq.empty[(Long, Seq[Float], Int)].toDF("vec_id", "embedding", "label")
+        .write.parquet(s"$dir/embeddings.parquet")
+      val df = spark.read.parquet(s"$dir/embeddings.parquet")
+      assert(Similarity.kmeansCentroids(df, "embedding", "vec_id", k = 8).isEmpty)
+      val cents = Similarity.writeIvfIndexQuantized(df, "embedding", "vec_id", k = 8, s"$dir/ivf", iters = 3)
+      assert(cents.isEmpty)
+      val (index, read) = Similarity.readIvfIndex(spark, s"$dir/ivf")
+      assert(read.isEmpty && index.count() == 0L)
+      assert(Similarity.ivfTopKQuantizedBatch(index, df, "vec_id", "embedding", read, k = 10)
+        .collect().isEmpty)
+      assert(Similarity.ivfTopKQuantized(index, Seq.fill(32)(0.5), read, k = 10).collect().isEmpty)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+  }
 }
