@@ -36,6 +36,9 @@ object functions {
   private[graft] def union_agg(sketches: Column, codec: SketchCodec[_ <: AnyRef]): Column =
     toCol(SketchUnionAgg(toExpr(sketches), codec).toAggregateExpression())
 
+  private def summary(op: SketchOp, sketch: Column): Column =
+    toCol(SketchSummary(toExpr(sketch), op))
+
   private def query(op: SketchOp, sketch: Column, arg: Expression): Column =
     toCol(SketchQuery(toExpr(sketch), arg, op))
 
@@ -91,7 +94,7 @@ object functions {
 
   /** New filter = word-wise OR of two serialized filters (params must match). */
   def bloom_union(a: Column, b: Column): Column =
-    toCol(BloomUnion(toExpr(a), toExpr(b)))
+    query(SketchOp.BloomUnion, a, toExpr(b))
 
   /** OR-merge a column of serialized filters into one. $unionContract */
   def bloom_union_agg(filters: Column): Column = union_agg(filters, BloomCodec)
@@ -100,24 +103,24 @@ object functions {
     * byte_count, bit_count, k, is_empty.
     */
   def bloom_describe(filter: Column): Column =
-    toCol(BloomDescribe(toExpr(filter)))
+    summary(SketchOp.BloomDescribe, filter)
 
   /** True iff the filter has no bit set (reference `bool(bf)` inverted). */
   def bloom_is_empty(filter: Column): Column =
-    toCol(BloomIsEmpty(toExpr(filter)))
+    summary(SketchOp.BloomIsEmpty, filter)
 
   /** Linear-counting distinct estimate from the filter's bit occupancy
     * (no extra sketch needed — the filter IS the estimator).
     */
   def bloom_cardinality_estimate(filter: Column): Column =
-    toCol(BloomCardinalityEstimate(toExpr(filter)))
+    summary(SketchOp.BloomCardinalityEstimate, filter)
 
   /** `|A ∩ B|` estimate over two compatible filters via inclusion-
     * exclusion of the linear-counting estimates — the SBBF sibling of
     * [[hll_intersect_estimate]]. Absolute error scales with `|A| + |B|`.
     */
   def bloom_intersect_estimate(a: Column, b: Column): Column =
-    toCol(BloomIntersectEstimate(toExpr(a), toExpr(b)))
+    query(SketchOp.BloomIntersectEstimate, a, toExpr(b))
 
   // --------------------------------------------------- counting bloom (CBF)
 
@@ -188,7 +191,7 @@ object functions {
     * stage_count, inserted_count, compound_fp_bound.
     */
   def sbf_describe(filter: Column): Column =
-    toCol(SbfDescribe(toExpr(filter)))
+    summary(SketchOp.SbfDescribe, filter)
 
   // ------------------------------------------------------ sibling sketches
 
@@ -204,14 +207,14 @@ object functions {
     * $unionContract */
   def hll_union_agg(sketches: Column): Column = union_agg(sketches, HllCodec)
 
-  def hll_estimate(sketch: Column): Column = toCol(HllEstimate(toExpr(sketch)))
+  def hll_estimate(sketch: Column): Column = summary(SketchOp.HllEstimate, sketch)
 
   /** Inclusion-exclusion estimate of the intersection cardinality of two
     * HLL sketches (same precision required). Error compounds from three
-    * estimates — see the expression scaladoc.
+    * estimates — see [[graft.core.Hll.intersectEstimate]].
     */
   def hll_intersect_estimate(a: Column, b: Column): Column =
-    toCol(HllIntersectEstimate(toExpr(a), toExpr(b)))
+    query(SketchOp.HllIntersectEstimate, a, toExpr(b))
 
   /** KMV bottom-k distinct sketch: EXACT below k, RSE ~ 1/sqrt(k-2) above. */
   def kmv_agg(key: Column, k: Int): Column = build(KmvKernel, key)(k)
@@ -220,16 +223,16 @@ object functions {
   /** Bottom-k merge of a column of stored KMV sketches. $unionContract */
   def kmv_union_agg(sketches: Column): Column = union_agg(sketches, KmvCodec)
 
-  def kmv_estimate(sketch: Column): Column = toCol(KmvEstimate(toExpr(sketch)))
+  def kmv_estimate(sketch: Column): Column = summary(SketchOp.KmvEstimate, sketch)
 
   /** Theta-style intersection (single joint threshold — unlike HLL's
     * inclusion-exclusion, the error does not compound from three
     * estimates; exact while both sketches are unsaturated).
     */
   def kmv_intersect_estimate(a: Column, b: Column): Column =
-    toCol(KmvIntersectEstimate(toExpr(a), toExpr(b)))
+    query(SketchOp.KmvIntersectEstimate, a, toExpr(b))
 
-  def kmv_describe(sketch: Column): Column = toCol(KmvDescribe(toExpr(sketch)))
+  def kmv_describe(sketch: Column): Column = summary(SketchOp.KmvDescribe, sketch)
 
   /** KMV distinct-sample-with-payload: bottom-k on the key hash carrying
     * a string payload per retained key — uniform distinct-sample +
@@ -246,14 +249,14 @@ object functions {
   def kmv_sample_union_agg(sketches: Column): Column = union_agg(sketches, KmvSampleCodec)
 
   def kmv_sample_estimate(sketch: Column): Column =
-    toCol(KmvSampleEstimate(toExpr(sketch)))
+    summary(SketchOp.KmvSampleEstimate, sketch)
 
   /** The retained sample payloads, ascending by key hash. */
   def kmv_sample_values(sketch: Column): Column =
-    toCol(KmvSampleValues(toExpr(sketch)))
+    summary(SketchOp.KmvSampleValues, sketch)
 
   def kmv_sample_describe(sketch: Column): Column =
-    toCol(KmvSampleDescribe(toExpr(sketch)))
+    summary(SketchOp.KmvSampleDescribe, sketch)
 
   /** WEIGHTED distinct-sample (Efraimidis-Spirakis A-RES): retain the k
     * distinct keys with the largest priorities u(hash)^(1/weight) — a
@@ -271,10 +274,10 @@ object functions {
 
   /** The retained (value, weight) sample entries, ascending by hash. */
   def weighted_sample_entries(sketch: Column): Column =
-    toCol(WeightedSampleEntries(toExpr(sketch)))
+    summary(SketchOp.WeightedSampleEntries, sketch)
 
   def weighted_sample_describe(sketch: Column): Column =
-    toCol(WeightedSampleDescribe(toExpr(sketch)))
+    summary(SketchOp.WeightedSampleDescribe, sketch)
 
   /** Count-min frequency sketch: estimate in [true, true + eps*N] w.p. 1-delta. */
   def cms_agg(key: Column, eps: Double, delta: Double): Column =
@@ -290,7 +293,7 @@ object functions {
   /** Equi-join cardinality estimate from two same-dimension CMS: never
     * under, over by <= eps*totalA*totalB w.p. 1-delta. */
   def cms_inner_product(a: Column, b: Column): Column =
-    toCol(CmsInnerProduct(toExpr(a), toExpr(b)))
+    query(SketchOp.CmsInnerProduct, a, toExpr(b))
 
   /** Merging t-digest quantile sketch (compression delta, default 100). */
   def tdigest_agg(value: Column, compression: Double): Column =
@@ -324,7 +327,7 @@ object functions {
 
   /** Top-m tracked keys with their count intervals. */
   def mg_topk(sketch: Column, m: Int): Column =
-    toCol(MgTopK(toExpr(sketch), lit(m)))
+    query(SketchOp.MgTopK, sketch, lit(m))
 
   def kll_quantile(sketch: Column, q: Double): Column =
     query(SketchOp.KllQuantile, sketch, lit(q))

@@ -1452,8 +1452,9 @@ object SparkEntry {
           coalesce(sum(when(col("count") =!= k, 1L).otherwise(0L)), lit(0L))
             .as("bad")).head()
       val allK = cRow.getLong(0) == nQ && cRow.getLong(1) == 0L
+      // an empty index: the code width holds vacuously
       val codeBytes = index.select(length(col("pqcode"))).distinct()
-        .collect().map(_.getInt(0)).toSeq == Seq(8)
+        .collect().forall(_.getInt(0) == 8)
       val purity = batch
         .join(labels.toDF("query_id", "qlab"), "query_id")
         .join(labels.toDF("id", "nlab"), "id")

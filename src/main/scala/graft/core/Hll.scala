@@ -66,6 +66,16 @@ final class Hll private[core] (val p: Int, val registers: Array[Byte])
     math.round(corrected)
   }
 
+  /** Inclusion-exclusion estimate of |A INTERSECT B| for two sketches of
+    * the same precision: est(A) + est(B) - est(A UNION B), clamped at 0;
+    * neither sketch changes. Error compounds from the three estimates (it
+    * can exceed the single-sketch bound when the true intersection is
+    * small relative to the union — the standard inclusion-exclusion
+    * caveat).
+    */
+  def intersectEstimate(other: Hll): Long =
+    math.max(0L, estimate + other.estimate - copy().merge(other).estimate)
+
   /** Standard error of the estimator: 1.04 / sqrt(m). */
   def relativeError: Double = 1.04 / math.sqrt(m.toDouble)
 

@@ -48,34 +48,37 @@ class SketchCodec[S <: AnyRef](
   final def finishBytes(bytes: Array[Byte]): Array[Byte] =
     finish.fold(bytes)(f => toBytes(f(fromBytes(bytes))))
 
-  // Per-thread single slot keyed by byte-array identity: a query's sketch
-  // blob is typically one array for a whole task (a subquery result, a
-  // broadcast value), so each thread parses it once. On an executor the
-  // slot is released when the task completes — a tens-of-MB filter must
-  // not stay pinned to a task thread for the JVM's life. On the driver
-  // (no TaskContext, no completion hook) a SoftReference lets the GC bound
-  // it; without a slot there, a probe constant-folded over a LocalRelation
-  // would re-parse the same array per row. A sketch column holding a fresh
-  // array per row misses and re-parses.
-  @transient private[this] lazy val taskSlot = new ThreadLocal[(Array[Byte], S)]
-  @transient private[this] lazy val driverSlot = new ThreadLocal[SoftReference[(Array[Byte], S)]]
+  // Per-thread two-entry slot keyed by byte-array identity: a query's
+  // sketch blob is typically one array for a whole task (a subquery
+  // result, a broadcast value), so each thread parses it once, and the
+  // two operands of a pairwise query never evict each other row by row.
+  // On an executor the slot is released when the task completes — a
+  // tens-of-MB filter must not stay pinned to a task thread for the JVM's
+  // life. On the driver (no TaskContext, no completion hook) a
+  // SoftReference lets the GC bound it; without a slot there, a probe
+  // constant-folded over a LocalRelation would re-parse the same array
+  // per row. A sketch column holding a fresh array per row misses and
+  // re-parses.
+  @transient private[this] lazy val taskSlot = new ThreadLocal[ParseSlot[S]]
+  @transient private[this] lazy val driverSlot = new ThreadLocal[SoftReference[ParseSlot[S]]]
 
   final def parse(bytes: Array[Byte]): S = {
-    val c = taskSlot.get()
-    if (c != null && (c._1 eq bytes)) c._2
+    var slot = taskSlot.get()
+    if (slot != null && (slot.bytes0 eq bytes)) slot.sketch0
     else {
-      val tc = TaskContext.get()
-      if (tc == null) {
-        val sr = driverSlot.get()
-        val e = if (sr != null) sr.get() else null
-        if (e != null && (e._1 eq bytes)) e._2
-        else { val s = fromBytes(bytes); driverSlot.set(new SoftReference((bytes, s))); s }
-      } else {
-        val s = fromBytes(bytes)
-        if (c == null) tc.addTaskCompletionListener[Unit](_ => taskSlot.remove())
-        taskSlot.set((bytes, s))
-        s
+      if (slot == null) {
+        val tc = TaskContext.get()
+        if (tc == null) {
+          val sr = driverSlot.get()
+          slot = if (sr != null) sr.get() else null
+          if (slot == null) { slot = new ParseSlot[S]; driverSlot.set(new SoftReference(slot)) }
+        } else {
+          slot = new ParseSlot[S]
+          taskSlot.set(slot)
+          tc.addTaskCompletionListener[Unit](_ => taskSlot.remove())
+        }
       }
+      slot.get(bytes, fromBytes)
     }
   }
 
@@ -105,6 +108,23 @@ object CmsCodec extends SketchCodec[CountMin]("cms", CountMin.fromBytes, _.merge
 object TDigestCodec extends SketchCodec[TDigest]("tdigest", TDigest.fromBytes, _.merge(_), _.toBytes)
 object KllCodec extends SketchCodec[Kll]("kll", Kll.fromBytes, _.merge(_), _.toBytes)
 object MgCodec extends SketchCodec[MisraGries]("mg", MisraGries.fromBytes, _.merge(_), _.toBytes)
+
+/** The two most recently parsed blobs of one thread, most recent first. */
+private final class ParseSlot[S <: AnyRef] {
+  var bytes0: Array[Byte] = _
+  var sketch0: S = _
+  private[this] var bytes1: Array[Byte] = _
+  private[this] var sketch1: S = _
+
+  def get(bytes: Array[Byte], parse: Array[Byte] => S): S = {
+    if (bytes0 ne bytes) {
+      val s = if (bytes1 eq bytes) sketch1 else parse(bytes)
+      bytes1 = bytes0; sketch1 = sketch0
+      bytes0 = bytes; sketch0 = s
+    }
+    sketch0
+  }
+}
 
 object SketchCodec {
   // lazy: each codec object's constructor reads `finish`'s default from

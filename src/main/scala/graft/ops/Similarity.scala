@@ -709,7 +709,8 @@ object Similarity {
       .orderBy(col("mx"), col("id")).limit(8 * ncodes)
       .select(col("v")).collect()
       .map(_.getSeq[Double](0).toArray)
-    require(sample.nonEmpty, "pqTrain: input is empty")
+    // an empty table trains the empty quantizer: no subspaces, no codes
+    if (sample.isEmpty) return Array.empty
     val dim = sample(0).length
     require(dim % m == 0, s"pqTrain: dimension $dim not divisible by m=$m")
     val subDim = dim / m
@@ -794,8 +795,8 @@ object Similarity {
     val codebooks = pqTrain(df, vecCol, idCol, m, ncodes, pqIters)
     val idx = df.select(
       col(idCol).cast("long").as("id"),
-      graft.functions.vec_nearest_centroid(col(vecCol), centroids).as("list"),
-      graft.functions.pq_encode(col(vecCol), codebooks).as("pqcode"))
+      nearestList(col(vecCol), centroids).as("list"),
+      pqCodeOf(col(vecCol), codebooks).as("pqcode"))
     val p = if (partitions > 0) partitions
       else math.max(1, df.rdd.getNumPartitions)
     idx.repartitionByRange(p, col("list"))
@@ -830,6 +831,18 @@ object Similarity {
     (spark.read.parquet(s"$path/lists"), centroids, codebooks)
   }
 
+  // the empty PQ quantizer (trained on an empty table) has no subspaces:
+  // an empty table has no rows to encode, a query's LUT is empty and no
+  // candidate is ever scored, so any valid LUT stride serves
+  private def pqCodeOf(vec: Column, codebooks: Array[Array[Array[Double]]]): Column =
+    if (codebooks.isEmpty) lit(null).cast("binary")
+    else graft.functions.pq_encode(vec, codebooks)
+  private def pqLutOf(vec: Column, codebooks: Array[Array[Array[Double]]]): Column =
+    if (codebooks.isEmpty) typedLit(Seq.empty[Double])
+    else graft.functions.pq_lut(vec, codebooks)
+  private def codebookSize(codebooks: Array[Array[Array[Double]]]): Int =
+    codebooks.headOption.fold(1)(_.length)
+
   /** Single-query ANN over an IVF-PQ index: probe the `nprobe` nearest
     * lists, ADC-score members (m LUT lookups each — the query's LUT is
     * computed once, driver-side), deterministic ties by id. Output
@@ -843,14 +856,17 @@ object Similarity {
       k: Int,
       nprobe: Int = 2): DataFrame = {
     val lists = probeLists(query, centroids, nprobe)
-    val lut = graft.expr.VectorKernels.pqLut(
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(query.toArray),
-      codebooks, isFloat = false)
-    val lutLit = typedLit((0 until lut.numElements()).map(lut.getDouble))
+    val lut = if (codebooks.isEmpty) Seq.empty[Double] else {
+      val l = graft.expr.VectorKernels.pqLut(
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(query.toArray),
+        codebooks, isFloat = false)
+      (0 until l.numElements()).map(l.getDouble)
+    }
+    val lutLit = typedLit(lut)
     index.filter(col("list").isin(lists: _*))
       .select(col("id"),
         graft.functions.pq_adc_score(
-          col("pqcode"), lutLit, codebooks(0).length).as("score"))
+          col("pqcode"), lutLit, codebookSize(codebooks)).as("score"))
       .orderBy(col("score").desc, col("id"))
       .limit(k)
       .select(col("id"), col("score"))
@@ -882,15 +898,14 @@ object Similarity {
     requireQueryRows(queries, maxQueryRows, "ivfTopKPqBatch")
     val q = queries.select(
       col(queryIdCol).cast("long").as("query_id"),
-      graft.functions.pq_lut(col(queryVecCol), codebooks).as("lut"),
-      graft.functions.vec_probe_lists(
-        col(queryVecCol), centroids, nprobe).as("probe_lists"))
+      pqLutOf(col(queryVecCol), codebooks).as("lut"),
+      probeListsOf(col(queryVecCol), centroids, nprobe).as("probe_lists"))
     val probes = q.select(col("query_id"), explode(col("probe_lists")).as("list"))
     val scored = index.join(broadcast(probes), "list")
       .join(broadcast(q.select(col("query_id"), col("lut"))), "query_id")
       .select(col("query_id"), col("id").as("neighbor_id"),
         graft.functions.pq_adc_score(
-          col("pqcode"), col("lut"), codebooks(0).length).as("score"))
+          col("pqcode"), col("lut"), codebookSize(codebooks)).as("score"))
     perQueryTopK(scored, k)
       .select(col("query_id"), col("neighbor_id").as("id"), col("score"))
   }

@@ -23,49 +23,14 @@ object Registry {
     * AggregateExpression during resolution. The build aggregates come
     * from [[SketchKernel.all]], their arity checked against the kernel's
     * signature; the `*_union_agg` entries from [[SketchCodec.all]], one
-    * per family codec; and the sketch queries from [[SketchOp.all]]: a
-    * key query hashes its key, the others cast their argument to double.
+    * per family codec; and the sketch functions from [[SketchOp.all]],
+    * their arity checked against the row's shape: a key query hashes its
+    * key, the other queries cast their argument to the core's type.
     */
   type Builder = Seq[Expression] => Expression
 
   val functions: Seq[(String, Builder)] = Seq[(String, Builder)](
     "abloom_key_hash" -> { args => AbloomKeyHash(args.head) },
-    "bloom_union" -> { args =>
-      require(args.size == 2, "bloom_union(a, b)")
-      BloomUnion(args(0), args(1))
-    },
-    "bloom_describe" -> { args => BloomDescribe(args.head) },
-    "bloom_is_empty" -> { args => BloomIsEmpty(args.head) },
-    "bloom_cardinality_estimate" -> { args => BloomCardinalityEstimate(args.head) },
-    "bloom_intersect_estimate" -> { args =>
-      require(args.size == 2, "bloom_intersect_estimate(a, b)")
-      BloomIntersectEstimate(args(0), args(1))
-    },
-    "sbf_describe" -> { args => SbfDescribe(args.head) },
-    "kmv_estimate" -> { args => KmvEstimate(args.head) },
-    "kmv_sample_estimate" -> { args => KmvSampleEstimate(args.head) },
-    "kmv_sample_values" -> { args => KmvSampleValues(args.head) },
-    "kmv_sample_describe" -> { args => KmvSampleDescribe(args.head) },
-    "weighted_sample_entries" -> { args => WeightedSampleEntries(args.head) },
-    "weighted_sample_describe" -> { args => WeightedSampleDescribe(args.head) },
-    "kmv_intersect_estimate" -> { args =>
-      require(args.size == 2, "kmv_intersect_estimate(a, b)")
-      KmvIntersectEstimate(args(0), args(1))
-    },
-    "kmv_describe" -> { args => KmvDescribe(args.head) },
-    "hll_estimate" -> { args => HllEstimate(args.head) },
-    "hll_intersect_estimate" -> { args =>
-      require(args.size == 2, "hll_intersect_estimate(a, b)")
-      HllIntersectEstimate(args(0), args(1))
-    },
-    "cms_inner_product" -> { args =>
-      require(args.size == 2, "cms_inner_product(a, b)")
-      CmsInnerProduct(args(0), args(1))
-    },
-    "mg_topk" -> { args =>
-      require(args.size == 2, "mg_topk(sketch, m)")
-      MgTopK(args(0), Cast(args(1), org.apache.spark.sql.types.IntegerType))
-    },
     "doc_fingerprint" -> { args =>
       require(args.size == 1, "doc_fingerprint(text)")
       DocFingerprint(args.head)
@@ -175,9 +140,13 @@ object Registry {
       s"${codec.family}_union_agg" -> { (args: Seq[Expression]) => SketchUnionAgg(args.head, codec) }
     } ++ SketchOp.all.map { op =>
       op.name -> { (args: Seq[Expression]) =>
-        val key = op.argType == LongType
-        require(args.size == 2, s"${op.name}(sketch, ${if (key) "key" else "x"})")
-        SketchQuery(args(0), if (key) AbloomKeyHash(args(1)) else Cast(args(1), DoubleType), op)
+        require(args.size == op.arity, op.signature)
+        op.shape match {
+          case SketchOp.Alone => SketchSummary(args(0), op)
+          case SketchOp.Pair => SketchQuery(args(0), args(1), op)
+          case SketchOp.Arg(LongType, _) => SketchQuery(args(0), AbloomKeyHash(args(1)), op)
+          case SketchOp.Arg(t, _) => SketchQuery(args(0), Cast(args(1), t), op)
+        }
       }
     }
 

@@ -326,6 +326,23 @@ class BatchServingSpec extends AnyFunSuite with SparkTestBase {
       assert(Similarity.ivfTopKQuantizedBatch(index, df, "vec_id", "embedding", read, k = 10)
         .collect().isEmpty)
       assert(Similarity.ivfTopKQuantized(index, Seq.fill(32)(0.5), read, k = 10).collect().isEmpty)
+      // PQ trains the empty quantizer beside it, and it round-trips
+      assert(Similarity.pqTrain(df, "embedding", "vec_id", m = 8).isEmpty)
+      Similarity.writeIvfPqIndex(df, "embedding", "vec_id", kLists = 8, m = 8, s"$dir/ivfpq",
+        ncodes = 32, kmIters = 3, pqIters = 3)
+      val (pqIndex, pqCents, codebooks) = Similarity.readIvfPqIndex(spark, s"$dir/ivfpq")
+      assert(pqIndex.count() == 0L && pqCents.isEmpty && codebooks.isEmpty)
+      assert(Similarity.ivfTopKPqBatch(pqIndex, df, "vec_id", "embedding", pqCents, codebooks, k = 10)
+        .collect().isEmpty)
+      assert(Similarity.ivfTopKPq(pqIndex, Seq.fill(32)(0.5), pqCents, codebooks, k = 10)
+        .collect().isEmpty)
+      // both ANN harness queries train their shared fixture and answer no queries
+      for (q <- Seq("ann_batch_serving", "ann_ivf_pq")) {
+        val row = graft.SparkEntry.queries(q)(spark, dir).collect().toSeq
+        assert(row.size == 1 && row.head.getLong(0) == 0L, s"$q: $row")
+        (1 until row.head.length).foreach(i =>
+          assert(row.head.getBoolean(i), s"$q: ${row.head.schema(i).name} holds vacuously"))
+      }
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 }
